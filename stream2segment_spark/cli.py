@@ -122,13 +122,13 @@ def cmd_download(spark: SparkSession, cfg: dict, cfg_text: str = "") -> int:
     import yaml
 
     from stream2segment_spark import warehouse as wh
-    from stream2segment_spark.pipeline import download_pipeline
+    from stream2segment_spark.pipeline import (
+        download_pipeline, fetch_inventories, stations_of)
     from stream2segment_spark.reporting import render_text
 
     radius = cfg.get("search_radius", {})
     lead, lag = cfg.get("timespan", [60.0, 120.0])
     transport = _dotted(cfg["transport"]) if cfg.get("transport") else None
-    old_segments = _table(spark, cfg, "segments")
     # channels_file: one path/glob, or a {dataselect_url: path} mapping —
     # the EIDA-federation case: each datacenter's station text is tagged
     # with its endpoint, cross-datacenter claims resolve via cfg routing
@@ -160,13 +160,16 @@ def cmd_download(spark: SparkSession, cfg: dict, cfg_text: str = "") -> int:
         from stream2segment_spark.operators.spatial import (
             load_tt_grid, travel_time_udf)
         tt_udf = travel_time_udf(spark, load_tt_grid(cfg["traveltimes"]))
+    # this execution's id, stamped on the segments it writes (the stored
+    # ones keep theirs; see download_pipeline)
+    did = wh._next_id(wh.read_small(cfg["warehouse"], "downloads"))
     out = download_pipeline(
         spark,
         _event_lines(spark, cfg["events_file"]),
         channel_lines,
         _table(spark, cfg, "events"),
         _table(spark, cfg, "channels"),
-        old_segments.drop("download_id"),
+        _table(spark, cfg, "segments"),
         transport=transport,
         tt_udf=tt_udf,
         minmag=radius.get("minmag", 3.0),
@@ -177,37 +180,14 @@ def cmd_download(spark: SparkSession, cfg: dict, cfg_text: str = "") -> int:
         base_url=cfg.get("dataselect_url", "http://dataselect.invalid/query"),
         min_sample_rate=cfg.get("min_sample_rate"),
         retry=cfg.get("retry"),
+        download_id=did,
         **dc_kwargs,
     )
-    from stream2segment_spark.pipeline import fetch_inventories, stations_of
-    # download-execution bookkeeping (reference Download model semantics:
-    # download_id = the execution that last WROTE the segment): rows
-    # inserted/updated by this run get this run's id, untouched rows keep
-    # their previous stamp (re-joined on segment id; unchanged re-fetches
-    # are skips, not writes, exactly like the reference's skip-unchanged)
-    did = wh._next_id(wh.read_small(cfg["warehouse"], "downloads"))
-    written = (out["written"].select("channel_id", "event_id")
-               .withColumn("__written", F.lit(1)))
-    segs = out["segments"].join(written, ["channel_id", "event_id"], "left")
-    if "download_id" in old_segments.columns:
-        segs = segs.join(
-            old_segments.select("id", F.col("download_id").alias("__old")),
-            "id", "left")
-    else:
-        segs = segs.withColumn("__old", F.lit(None).cast("long"))
-    # skipped rows keep their previous stamp; rows that never had one
-    # (legacy warehouse predating download_id) stay NULL — adopting them
-    # into this execution would let a later `db-drop -did` delete
-    # segments this run never wrote
-    segs = (segs.withColumn(
-                "download_id",
-                F.when(F.col("__written") == 1, F.lit(did))
-                 .otherwise(F.col("__old")))
-            .drop("__written", "__old"))
-    out["segments"] = segs
-    # materialize results BEFORE overwriting inputs they were derived from
-    for name in ("events", "channels", "segments"):
-        out[name] = out[name].localCheckpoint(eager=True)
+    # events and channels come back checkpointed (download_pipeline
+    # materializes them at ingest), and stations derive from that
+    # checkpoint; segments are derived from the stored segments table,
+    # so materialize them BEFORE the write overwrites it
+    out["segments"] = out["segments"].localCheckpoint(eager=True)
     stations = stations_of(out["channels"])
     if cfg.get("inventory"):  # 's2s download -i': station XML inventories
         station_url = cfg.get(
@@ -218,7 +198,6 @@ def cmd_download(spark: SparkSession, cfg: dict, cfg_text: str = "") -> int:
         stations = fetch_inventories(
             stations, out["channels"], out["segments"],
             base_url=station_url, transport=transport)
-    stations = stations.localCheckpoint(eager=True)
     for name in ("events", "channels", "segments"):
         _write(out[name], cfg, name)
     _write(stations, cfg, "stations")

@@ -12,8 +12,22 @@ download/main.py:193-366) as a chain of DataFrame transforms:
  per-code response stats                           (A1/A3)
 
 Every stage is a DataFrame -> DataFrame function from the operator
-modules; this module only wires them. Nothing collects to the driver
-except the tiny max(id) aggregates inside id-sync.
+modules; this module only wires them. Each product is computed once; the
+chain materializes at three points, each for a reason of its own:
+
+- the ingested dims (``events``, ``channels``) right after id-sync: the
+  spatial join, the channel-key join, ``stations_of`` and the caller's
+  warehouse writes all read them, and without a checkpoint every one of
+  those actions re-parses the FDSN text and re-runs dedup and id-sync;
+- the ``fetched`` responses: the HTTP fetch is not idempotent, so no
+  second action may repeat dataselect requests or see a different
+  transient response;
+- the final ``segments`` (done by the caller, ``cli.cmd_download``):
+  they are derived from the stored segments table that the write then
+  overwrites.
+
+Apart from those, only the tiny max(id) aggregates inside id-sync are
+collected.
 """
 
 from __future__ import annotations
@@ -171,14 +185,24 @@ def download_pipeline(
     window_lead_sec: float = 60.0, window_lag_sec: float = 120.0,
     base_url: str = "http://dataselect.invalid/query",
     retry: dict | None = None,
+    download_id: int | None = None,
     **channel_filters,
 ) -> dict[str, DataFrame]:
     """Run the full chain; returns dict(events, channels, candidates,
-    segments, stats). ``transport`` is the injectable HTTP callable of
-    sources.fetch (tests pass a deterministic one)."""
-    events = ingest_events(event_lines, existing_events)
+    todo, segments, stats). ``transport`` is the injectable HTTP callable
+    of sources.fetch (tests pass a deterministic one).
+
+    ``download_id`` is the execution id stamped on every segment this run
+    writes (inserted or updated); the stored rows of
+    ``existing_segments`` keep their own ``download_id`` through the
+    merge, and stored rows without one (a warehouse predating the column)
+    stay NULL. Without it, written rows carry no stamp."""
+    # checkpointed right after ingest: every downstream action reads one
+    # materialization instead of re-parsing the FDSN text
+    events = ingest_events(event_lines, existing_events) \
+        .localCheckpoint(eager=True)
     channels = ingest_channels(channel_lines, existing_channels,
-                               **channel_filters)
+                               **channel_filters).localCheckpoint(eager=True)
     stations = stations_of(channels)
 
     ev = events.select(
@@ -254,6 +278,15 @@ def download_pipeline(
                                                  "request_end"])
     keyed = sync_surrogate_ids(existing_segments, changed,
                                ["channel_id", "event_id"])
+    # download_id = the execution that last WROTE the row (reference
+    # Download model): skipped re-fetches are not writes, so only the
+    # changed rows take this run's stamp; stored rows carry theirs
+    # through the merge (NULL where the stored table has no such column:
+    # adopting those into this execution would let a later
+    # `db-drop -did` delete segments this run never wrote)
+    if download_id is not None:
+        keyed = keyed.withColumn("download_id",
+                                 F.lit(download_id).cast("long"))
     segments = merge_latest_wins(existing_segments, keyed,
                                  ["channel_id", "event_id"])
 
@@ -262,5 +295,5 @@ def download_pipeline(
                                  F.lit("not_found")).alias("code"))
              .agg(F.count("*").alias("n")))
     return {"events": events, "channels": channels,
-            "candidates": candidates, "todo": todo, "written": keyed,
+            "candidates": candidates, "todo": todo,
             "segments": segments, "stats": stats}

@@ -54,16 +54,27 @@ class _Record:
     @property
     def end(self) -> datetime:
         """Time just past the last sample (start of the next contiguous
-        record): start + n/rate."""
-        return self.start + timedelta(
-            seconds=len(self.samples) / self.sample_rate)
+        record): start + n/rate. A start near the end of year 9999 with a
+        tiny rate lands past datetime's range: MSeedError, as in _btime."""
+        try:
+            return self.start + timedelta(
+                seconds=len(self.samples) / self.sample_rate)
+        except OverflowError as exc:
+            raise MSeedError(f"record end out of range: {exc}") from None
 
 
 def _btime(raw: bytes, bo: str) -> datetime:
     year, doy, hh, mm, ss, _, fract = struct.unpack(bo + "HHBBBBH", raw)
-    return (datetime(year, 1, 1, tzinfo=timezone.utc)
-            + timedelta(days=doy - 1, hours=hh, minutes=mm, seconds=ss,
-                        microseconds=fract * 100))
+    # a BTIME outside datetime's range (year 0 or > 9999, or a day-of-year
+    # past the end of 9999) is a malformed header: raise the decoder's own
+    # error so every per-row guard that catches MSeedError skips it
+    try:
+        return (datetime(year, 1, 1, tzinfo=timezone.utc)
+                + timedelta(days=doy - 1, hours=hh, minutes=mm, seconds=ss,
+                            microseconds=fract * 100))
+    except (ValueError, OverflowError) as exc:
+        raise MSeedError(f"BTIME out of range (year={year}, doy={doy}): "
+                         f"{exc}") from None
 
 
 def _sample_rate(factor: int, multiplier: int) -> float:

@@ -397,6 +397,59 @@ def test_second_download_is_skip_only(warehouse, spark, capsys):
     assert segs.filter(f"download_id = {rows[0]['id']}").count() == n_before
 
 
+def transport_legacy(url: str, body):
+    if "cha=1&" in url:  # channel 1 serves no data: a stable 204
+        return None, 204
+    return transport_ok(url, body)
+
+
+def test_download_over_legacy_warehouse(spark, tmp_path, capsys):
+    """A warehouse written before segments carried download_id: a new
+    download stamps only the rows it rewrites. Rows it re-fetches but
+    skips as unchanged, and rows it does not re-fetch, stay NULL —
+    adopting them would let `db-drop -did` delete segments this
+    execution never wrote."""
+    from pyspark.sql import functions as F
+
+    from stream2segment_spark import warehouse as wh
+    (tmp_path / "events.txt").write_text("\n".join(EVENT_LINES))
+    (tmp_path / "channels.txt").write_text("\n".join(CHANNEL_LINES + [
+        "GE|STA1||HHN|10.5|20.5" + _CH.format(sr="100.0"),
+        "GE|STA1||HHE|10.5|20.5" + _CH.format(sr="100.0")]))
+    cfg = {
+        "warehouse": str(tmp_path / "wh"),
+        "events_file": str(tmp_path / "events.txt"),
+        "channels_file": str(tmp_path / "channels.txt"),
+        "search_radius": {"minmag": 3, "maxmag": 7,
+                          "minmag_radius": 1, "maxmag_radius": 5},
+        "min_sample_rate": 50.0,
+        "timespan": [60, 120],
+        "transport": "tests.test_cli:transport_legacy",
+    }
+    assert cli.cmd_download(spark, cfg) == 0
+    path = str(tmp_path / "wh" / "segments.parquet")
+    first = {r["channel_id"]: r["download_code"]
+             for r in spark.read.parquet(path).collect()}
+    assert first == {1: 204, 2: 200, 3: 200}
+    # turn it into a legacy table: no download_id column, and channel 2
+    # stored as an undecodable body (-2), which the retry policy re-fetches
+    legacy = (spark.read.parquet(path).drop("download_id")
+              .withColumn("download_code",
+                          F.when(F.col("channel_id") == 2, F.lit(-2))
+                           .otherwise(F.col("download_code")))
+              .localCheckpoint(eager=True))
+    legacy.write.mode("overwrite").parquet(path)
+
+    assert cli.cmd_download(spark, cfg) == 0
+    capsys.readouterr()
+    did = wh.resolve_downloads(str(tmp_path / "wh"))[-1]["id"]
+    got = {r["channel_id"]: (r["download_code"], r["download_id"])
+           for r in spark.read.parquet(path).collect()}
+    assert got == {1: (204, None),   # re-fetched, unchanged: skipped
+                   2: (200, did),    # re-fetched and rewritten
+                   3: (200, None)}   # stored 200: not re-fetched
+
+
 def test_dl_log_and_config_print_latest(warehouse, capsys):
     _, cfg_path = warehouse
     assert cli.main(["dl-log", "-c", str(cfg_path)]) == 0

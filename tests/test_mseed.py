@@ -243,3 +243,68 @@ def test_fixture_blob_periodicity_pins_encode_cache():
     assert _quality_blob_for_residue(4) == b"broken!!" * 8
     assert _quality_blob_for_residue(0) == _quality_blob_for_residue(1)
     assert _quality_blob_for_residue(3) != _quality_blob_for_residue(0)
+
+
+def _le_header_blob(year, doy, factor=100, multiplier=1, n=5):
+    """One little-endian record with a free BTIME and rate: the byte-order
+    sniff reads any year outside 1900-2100 as little-endian, so these are
+    the headers a random or corrupt body most often produces."""
+    import struct
+    hdr = (b"000001D " + b"APE  " + b"  " + b"HHZ" + b"GE"
+           + struct.pack("<HHBBBBH", year, doy, 23, 59, 59, 0, 0)
+           + struct.pack("<Hhh", n, factor, multiplier)
+           + bytes([0, 0, 0, 1])
+           + struct.pack("<iHH", 0, 64, 48))
+    body = hdr + struct.pack("<HHBBBB", 1000, 0, 3, 0, 9, 0)
+    return body + b"\x00" * (512 - len(body))
+
+
+# year 0 (ValueError from datetime), a day-of-year past 9999-12-31
+# (OverflowError from the BTIME sum) and a valid start whose n/rate end
+# passes 9999-12-31 (OverflowError from _Record.end)
+_OUT_OF_RANGE = [_le_header_blob(0, 1), _le_header_blob(9999, 400),
+                 _le_header_blob(9999, 365, -32768, -32768)]
+
+
+@pytest.mark.parametrize("blob", _OUT_OF_RANGE,
+                         ids=["year0", "doy_past_9999", "end_past_9999"])
+def test_out_of_range_btime_is_mseed_error(blob):
+    with pytest.raises(MS.MSeedError, match="out of range"):
+        MS.unpack_blob(blob)
+
+
+def test_random_bytes_raise_only_mseed_error():
+    """Seeded fuzz: whatever random bytes unpack_blob gets, the only
+    exception that escapes is MSeedError — the type paramtable's skip
+    guard and the decode UDF catch. About half of these bodies carry an
+    out-of-range BTIME."""
+    import collections
+    import random
+    rnd = random.Random(0)
+    escaped = collections.Counter()
+    for _ in range(20_000):
+        n = rnd.choice([8, 47, 64, 128, 512])
+        blob = bytes(rnd.getrandbits(8) for _ in range(n))
+        try:
+            MS.unpack_blob(blob)
+        except MS.MSeedError:
+            pass
+        except Exception as exc:  # noqa: BLE001 - counting what escapes
+            escaped[type(exc).__name__] += 1
+    assert not escaped, dict(escaped)
+
+
+def test_out_of_range_btime_is_error_row_in_udf(spark):
+    """An out-of-range BTIME is an error ROW, not a task failure: an
+    OverflowError would escape the UDF's except tuple and fail the
+    download's decode stage."""
+    df = spark.createDataFrame(
+        [(i, bytearray(b)) for i, b in enumerate(_OUT_OF_RANGE)],
+        "id long, data binary")
+    res = (df.select("id", F.element_at(MS.unpack_mseed_udf()("data"), 1)
+                     .alias("ms"))
+           .select("id", "ms.seed_id", "ms.error").collect())
+    assert len(res) == len(_OUT_OF_RANGE)
+    for r in res:
+        assert r["seed_id"] is None
+        assert "out of range" in r["error"]

@@ -154,3 +154,38 @@ def test_channels_cross_datacenter_routing(spark):
                           datacenter_col="dc", routing_rules=rules)
     got = sorted((r["station"], r["channel"]) for r in out.collect())
     assert got == [("STA1", "HHZ"), ("STA2", "HHN")]
+
+
+def test_plan_reads_fdsn_text_once(spark, tmp_path):
+    """Plan shape of the download chain: the ingested dims come back as
+    checkpoints (LogicalRDD), and neither the candidates nor the segments
+    plan still holds a text-file scan, so every downstream action reads
+    one materialization instead of re-parsing the FDSN text and
+    re-running dedup and id-sync."""
+    import re
+    (tmp_path / "events.txt").write_text("\n".join(EVENT_LINES))
+    (tmp_path / "channels.txt").write_text("\n".join(CHANNEL_LINES))
+    out = download_pipeline(
+        spark,
+        spark.read.text(str(tmp_path / "events.txt")),
+        spark.read.text(str(tmp_path / "channels.txt")),
+        spark.createDataFrame([], "id long, event_id string"),
+        spark.createDataFrame(
+            [], "id long, network string, station string, location string, "
+                "channel string, start_time timestamp"),
+        spark.createDataFrame([], SEG_SCHEMA),
+        transport=_mock_transport, min_sample_rate=50.0)
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan()
+
+    for name in ("events", "channels"):
+        assert optimized(out[name]).nodeName() == "LogicalRDD", name
+    text_scan = re.compile(r"Relation \[[^\]]*\] text")
+    for name in ("candidates", "segments"):
+        plan = optimized(out[name]).toString()
+        assert not text_scan.search(plan), f"{name} re-reads FDSN text"
+    # the scan pattern does match a plan that reads the text directly
+    assert text_scan.search(optimized(
+        spark.read.text(str(tmp_path / "events.txt"))).toString())
+    assert out["segments"].count() == 4
