@@ -263,8 +263,7 @@ def cmd_process(spark: SparkSession, cfg: dict, pyfunc_spec: str,
                 outfile: str | None, append: bool = False) -> int:
     import importlib.util as ilu
 
-    from stream2segment_spark.process import process_df
-    from stream2segment_spark.selectexpr import exprquery
+    from stream2segment_spark.process import process
 
     path, _, attr = pyfunc_spec.rpartition(":")
     if path.endswith(".py"):  # a file path: import by location
@@ -277,32 +276,17 @@ def cmd_process(spark: SparkSession, cfg: dict, pyfunc_spec: str,
     schema = cfg.get("output_schema") or getattr(func, "output_schema", None)
     if not schema:
         raise SystemExit("need 'output_schema' in config or on the function")
-    # the full reference selection grammar over the warehouse: flat
-    # attributes, derived/hybrid attributes AND dotted relationship paths,
-    # compiled to joins + predicates by the selection compiler
+    # the library engine over the warehouse: the full reference selection
+    # grammar (flat, derived and dotted attributes), the pyfunc sees the
+    # segment with its event, channel and station, and '--append -o out'
+    # processes only the segments 'out' does not hold yet
     dfs = {name: _table(spark, cfg, name)
            for name in ("segments", "events", "channels", "stations")}
-    segs = exprquery(_warehouse_graph(dfs), dfs, "segments",
-                     cfg.get("segments_selection") or {})
-    do_append = False
-    if append and outfile:
-        # K3 incremental mode ('s2s process --append'): anti-join the ids
-        # already present in the output, process only the new segments
-        from stream2segment_spark.sinks.writers import already_processed_ids
-        done = already_processed_ids(spark, outfile)
-        if done is not None:
-            do_append = True
-            segs = segs.join(done.withColumnRenamed(done.columns[0], "id"),
-                             "id", "left_anti")
-    result = process_df(segs, func, schema, config=cfg.get("config"))
-    if outfile:
-        from stream2segment_spark.sinks.writers import write_output
-        if do_append:
-            # the plan READS the file it is about to append to —
-            # materialize before writing
-            result = result.localCheckpoint(eager=True)
-        write_output(result, outfile, append=do_append)
-    else:
+    result = process(_warehouse_graph(dfs), dfs, func, schema,
+                     cfg.get("segments_selection") or {},
+                     config=cfg.get("config"), outfile=outfile,
+                     append=append)
+    if not outfile:
         for row in result.toLocalIterator():
             print(row.asDict())
     return 0

@@ -19,9 +19,10 @@ chain materializes at three points, each for a reason of its own:
   spatial join, the channel-key join, ``stations_of`` and the caller's
   warehouse writes all read them, and without a checkpoint every one of
   those actions re-parses the FDSN text and re-runs dedup and id-sync;
-- the ``fetched`` responses: the HTTP fetch is not idempotent, so no
-  second action may repeat dataselect requests or see a different
-  transient response;
+- the ``fetched`` responses with their decoded miniSEED metrics: the HTTP
+  fetch is not idempotent, so no second action may repeat dataselect
+  requests or see a different transient response, and no branch below
+  the checkpoint runs the decode UDF again;
 - the final ``segments`` (done by the caller, ``cli.cmd_download``):
   they are derived from the stored segments table that the write then
   overwrites.
@@ -161,14 +162,20 @@ def fetch_inventories(
 
 
 def stations_of(channels: DataFrame) -> DataFrame:
-    """Distinct station dim derived from the channel frame (the reference
-    stores stations first, then channels; same natural key)."""
-    w_id = F.xxhash64("network", "station", "start_time")
-    return (channels
-            .select("network", "station", "latitude", "longitude",
+    """The station dim of the channel frame, one row per (network,
+    station, start_time), the reference's unique key (io/db/models.py:
+    314-317). An open (NULL) channel ``end_time`` wins, else the latest;
+    latitude/longitude come from the lowest channel id."""
+    key = ("network", "station", "start_time")
+    end = F.col("end_time")
+    return (channels.groupBy(*key)
+            .agg(F.min_by(F.struct("latitude", "longitude"), "id")
+                  .alias("loc"),
+                 F.when(F.max(end.isNull()), None)
+                  .otherwise(F.max(end)).alias("end_time"))
+            .select("network", "station", "loc.latitude", "loc.longitude",
                     "start_time", "end_time")
-            .distinct()
-            .withColumn("station_id", w_id))
+            .withColumn("station_id", F.xxhash64(*key)))
 
 
 def download_pipeline(
@@ -250,12 +257,13 @@ def download_pipeline(
     # the HTTP fetch is NON-IDEMPOTENT and this frame feeds several
     # branches (sync matched/fresh, the merge union, the stats agg) and
     # several returned frames — materialize once so no action repeats
-    # dataselect requests or sees a different transient response
-    fetched = fetched.localCheckpoint(eager=True)
+    # dataselect requests or sees a different transient response; the
+    # decode (metrics only) is part of it, so no branch re-runs the UDF
+    fetched = fetched.withColumn(
+        "ms", F.element_at(unpack_mseed_udf(include_samples=False)(
+            F.col("data")), 1)).localCheckpoint(eager=True)
 
-    decoded = fetched.withColumn(
-        "ms", F.element_at(unpack_mseed_udf()(F.col("data")), 1))
-    new_segments = decoded.select(
+    new_segments = fetched.select(
         "channel_id", "event_id", "event_distance_deg",
         "request_start", "request_end", "data",
         *(["datacenter"] if has_dc else []),

@@ -6,10 +6,10 @@ Reference lifecycle (SURVEY §3.1): selection query -> ids -> append-mode
 anti-join -> 600-row chunks -> per-row ``pyfunc(segment, config)`` with
 multiprocessing -> CSV/HDF writer. Spark shape: the chunking, id-fetching,
 session-cache and multiprocessing machinery disappears — selection compiles
-to one DataFrame plan, execution is ``mapInPandas`` over Arrow batches
-repartitioned by station (the reference's cache-locality ordering H3,
-process/main.py:650-661, becomes a partitioning hint), and the writer is a
-distributed ``df.write``.
+to one DataFrame plan that also broadcast-joins the segment's event, channel
+and station, execution is ``mapInPandas`` over Arrow batches, and the writer
+is a distributed ``df.write``. ``s2s process`` (``cli.cmd_process``) runs
+:func:`process` itself, so the CLI and the library share one path.
 
 Error semantics (X2, process/main.py:581-631): ``pyfunc`` raising
 :class:`SkipSegment` skips that row (collected to a side channel);
@@ -31,6 +31,8 @@ from stream2segment_spark.selectexpr import SelectionCompiler
 
 SEGMENT_ID_COLNAME = "segment_db_id"  # writer contract (process/writers.py:14)
 _ERROR_COL = "s2s_error"
+# the dims every processed segment carries (``segment.event.magnitude``)
+_DIMS = ("event", "channel", "station")
 
 
 class SkipSegment(Exception):
@@ -98,7 +100,6 @@ def process_df(
     output_schema: str | T.StructType,
     config: dict | None = None,
     id_col: str = "id",
-    station_col: str | None = None,
     collect_errors: bool = False,
 ) -> DataFrame:
     """Apply ``pyfunc(segment, config)`` to every row of ``segments``
@@ -106,8 +107,7 @@ def process_df(
     with ``segment_db_id`` prepended.
 
     ``output_schema``: DDL string or StructType of the USER columns.
-    ``station_col``: if given, repartition on it first (inventory-locality,
-    reference H3). ``collect_errors``: include skipped rows as
+    ``collect_errors``: include skipped rows as
     (segment_db_id, ..nulls.., s2s_error) instead of dropping them.
     """
     user_schema = (T._parse_datatype_string(output_schema)
@@ -135,8 +135,6 @@ def process_df(
             yield pd.DataFrame(out_rows, columns=[SEGMENT_ID_COLNAME,
                                                   *user_cols, _ERROR_COL])
 
-    if station_col:
-        segments = segments.repartition(F.col(station_col))
     result = segments.mapInPandas(run, full_schema)
     if collect_errors:
         return result
@@ -152,13 +150,12 @@ def process(
     config: dict | None = None,
     outfile: str | None = None,
     append: bool = False,
-    base_table: str = "segments",
-    join_dims: tuple[str, ...] = ("event", "channel", "station"),
-    collect_errors: bool = False,
 ) -> DataFrame:
-    """Full pipeline: selection (P1) -> broadcast dim joins -> append-mode
-    anti-join (K3) -> station-partitioned mapInPandas (X1/X2) -> optional
-    CSV/parquet sink (K1/K2).
+    """Full pipeline: selection (P1) -> broadcast event/channel/station
+    joins -> append-mode anti-join (K3) -> mapInPandas (X1/X2) -> optional
+    CSV/parquet sink (K1/K2). Skipped segments are neither returned nor
+    written. ``append`` with an existing ``outfile`` processes only the
+    segments it does not hold yet and adds their rows to it.
 
     Default selection mirrors the reference's
     ``{'has_valid_data': 'true', 'maxgap_numsamples': '(-0.5, 0.5)'}``
@@ -167,39 +164,28 @@ def process(
     if segments_selection is None:
         segments_selection = {"has_valid_data": "true",
                               "maxgap_numsamples": "(-0.5, 0.5)"}
-    compiler = SelectionCompiler(graph, dfs, base_table)
-    for rel in join_dims:
-        compiler._ensure_join(graph.table(base_table).relationships[rel])
+    compiler = SelectionCompiler(graph, dfs, "segments")
+    for rel in _DIMS:
+        compiler._ensure_join(graph.table("segments").relationships[rel])
     selected = compiler.compile(segments_selection, keep_joined=True)
 
+    done = None
     if append and outfile:
         from stream2segment_spark.sinks.writers import already_processed_ids
         done = already_processed_ids(selected.sparkSession, outfile)
-        if done is not None:
-            selected = selected.join(
-                done.withColumnRenamed(SEGMENT_ID_COLNAME, "id"),
-                "id", "left_anti")
+    if done is not None:
+        selected = selected.join(
+            done.withColumnRenamed(SEGMENT_ID_COLNAME, "id"),
+            "id", "left_anti")
 
-    station_col = "__station__id" if "station" in join_dims else None
-    result = process_df(selected, pyfunc, output_schema, config,
-                        station_col=station_col,
-                        collect_errors=collect_errors)
+    result = process_df(selected, pyfunc, output_schema, config)
     if outfile:
         from stream2segment_spark.sinks.writers import write_output
-        out = result
-        if collect_errors:
-            # skipped segments (SkipSegment -> error rows) must NOT be
-            # written: an all-null junk row would also mark the segment
-            # 'done' for the next append run, so it is never retried
-            # (the reference never writes skipped segments)
-            out = result.filter(F.col(_ERROR_COL).isNull()) \
-                        .drop(_ERROR_COL)
-        if append:
+        if done is not None:
             # the plan READS the file it is about to append to (the
-            # already-processed anti-join) — materialize before writing,
-            # same guard as the CLI path
-            out = out.localCheckpoint(eager=True)
-        write_output(out, outfile, append=append)
+            # already-processed anti-join) — materialize before writing
+            result = result.localCheckpoint(eager=True)
+        write_output(result, outfile, append=done is not None)
     return result
 
 

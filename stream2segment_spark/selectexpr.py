@@ -25,7 +25,8 @@ Grammar (reference: sqlevalexpr.py:312-341):
 Attributes may be dotted (``event.magnitude``): the relationship path from
 the schema graph is inner-joined exactly once per referenced relationship
 (reference: sqlevalexpr.py:207-211), including multi-hop edges (segment ->
-channels -> stations). Derived columns (columns.py) are first-class.
+channels -> stations); a hop two relationships share is joined once.
+Derived columns (columns.py) are first-class.
 """
 
 from __future__ import annotations
@@ -167,35 +168,39 @@ class SelectionCompiler:
     is projected back to the base table's columns unless ``keep_joined``.
     """
 
-    def __init__(
-        self,
-        graph: SchemaGraph,
-        dfs: dict[str, DataFrame],
-        base: str,
-        broadcast_dims: bool = True,
-    ):
+    def __init__(self, graph: SchemaGraph, dfs: dict[str, DataFrame],
+                 base: str):
         self.graph = graph
         self.dfs = dfs
         self.base = base
-        self.broadcast_dims = broadcast_dims
         self.df = dfs[base]
         self._base_cols = list(self.df.columns)
-        self._joined: set[str] = set()
+        # the column prefix of every hop path; a path that is itself a
+        # relationship (``channel`` is the first hop of ``station``) lives
+        # under that relationship's name, so the two share one join
+        rels = graph.table(base).relationships.values()
+        self._prefixes = {r.path[:i + 1]: _prefix(r.name, i)
+                          for r in rels for i in range(len(r.path) - 1)}
+        self._prefixes.update({r.path: _prefix(r.name) for r in rels})
+        self._joined: set[tuple] = set()  # hop paths joined so far
 
     # -- joins --------------------------------------------------------------
 
     def _ensure_join(self, rel: Relationship) -> None:
-        """Inner-join the relationship path once (reference adds each join a
-        single time, sqlevalexpr.py:207-211). Dimensions are broadcast."""
-        if rel.name in self._joined:
-            return
+        """Inner-join each hop of the relationship path once (reference adds
+        each join a single time, sqlevalexpr.py:207-211), also when another
+        relationship shares the hop. Dimensions are broadcast."""
         left_prefix = ""  # keys of the first hop live on the base frame
-        n = len(rel.path)
         for i, hop in enumerate(rel.path):
-            right_prefix = _prefix(rel.name) if i == n - 1 else _prefix(rel.name, i)
+            path = rel.path[:i + 1]
+            right_prefix = self._prefixes[path]
+            if path in self._joined:
+                left_prefix = right_prefix
+                continue
+            self._joined.add(path)
             dim = self.dfs[hop.table]
             dim = dim.select([F.col(c).alias(right_prefix + c) for c in dim.columns])
-            if rel.broadcast and self.broadcast_dims:
+            if rel.broadcast:
                 dim = F.broadcast(dim)
             cond = None
             for lk, rk in zip(hop.left_keys, hop.right_keys):
@@ -203,7 +208,6 @@ class SelectionCompiler:
                 cond = c if cond is None else (cond & c)
             self.df = self.df.join(dim, cond, "inner")
             left_prefix = right_prefix
-        self._joined.add(rel.name)
 
     # -- attribute resolution ------------------------------------------------
 
@@ -295,9 +299,7 @@ def exprquery(
     base: str,
     conditions: dict[str, str] | None,
     orderby: list | None = None,
-    keep_joined: bool = False,
 ) -> DataFrame:
     """One-shot form of :class:`SelectionCompiler` — the Spark analogue of
     the reference's ``exprquery(sa_query, conditions, orderby)``."""
-    return SelectionCompiler(graph, dfs, base).compile(
-        conditions, orderby, keep_joined=keep_joined)
+    return SelectionCompiler(graph, dfs, base).compile(conditions, orderby)

@@ -65,9 +65,11 @@ def get_spark(
     # defaults to 1g: 32 concurrent tasks then share ~400 MB of unified
     # execution memory and shuffle writes die with UNABLE_TO_ACQUIRE_MEMORY
     # under load. Size the heap like the executor of a real cluster node
-    # instead. Only effective when this call launches the JVM (fresh
-    # process); ignored on an already-running session, like any JVM conf.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    # instead, within what the host has. Only effective when this call
+    # launches the JVM (fresh process); ignored on an already-running
+    # session, like any JVM conf.
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") \
+        or default_driver_mem()
 
     # workers unpickle engine closures by module reference: make the
     # package importable in worker processes regardless of the caller's cwd
@@ -89,6 +91,14 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
     return spark
+
+
+def default_driver_mem() -> str:
+    """Half the host's physical memory in whole GiB, at least 1g and at
+    most 32g: a heap past the physical memory (with the off-heap and
+    Python worker memory on top) gets the JVM killed, not spilled."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(max(total // 2**31, 1), 32)}g"
 
 
 def _ship_package(spark: SparkSession) -> None:

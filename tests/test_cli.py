@@ -189,6 +189,56 @@ def test_process_append_skips_done_segments(warehouse, capsys, tmp_path):
     assert len(ids) == len(set(ids))
 
 
+def seg_dims(segment, config):
+    return {"magnitude": segment.event.magnitude,
+            "channel": segment.channel.channel,
+            "network": segment.station.network}
+
+
+seg_dims.output_schema = "magnitude double, channel string, network string"
+# the fixture's one segment: event evA (mag 5.0) on GE.STA1..HHZ
+DIMS_ROW = {"magnitude": 5.0, "channel": "HHZ", "network": "GE"}
+
+
+def test_process_pyfunc_reads_event_channel_station(warehouse, capsys,
+                                                    tmp_path):
+    """'s2s process' hands the pyfunc the segment with its event, channel
+    and station over a download-written warehouse, even when the
+    selection names none of them."""
+    import ast
+
+    tmp, cfg_path = warehouse
+    cfg = yaml.safe_load(cfg_path.read_text())
+    cfg["segments_selection"] = {}
+    sel_cfg = tmp_path / "sel.yaml"
+    sel_cfg.write_text(yaml.safe_dump(cfg))
+    assert cli.main(["process", "-c", str(sel_cfg),
+                     "-p", "tests.test_cli:seg_dims"]) == 0
+    rows = [ast.literal_eval(line) for line in
+            capsys.readouterr().out.splitlines() if line.startswith("{")]
+    assert [{k: r[k] for k in DIMS_ROW} for r in rows] == [DIMS_ROW]
+
+
+def test_process_library_over_cli_warehouse(warehouse, spark, tmp_path):
+    """The library ``process()`` runs over the download CLI's warehouse
+    layout (stations keyed by ``station_id``, not ``id``), with the
+    reference's default selection, and writes what it returns."""
+    import pandas as pd
+
+    from stream2segment_spark.process import process
+
+    tmp, _ = warehouse
+    cfg = {"warehouse": str(tmp / "wh")}
+    dfs = {name: cli._table(spark, cfg, name)
+           for name in ("segments", "events", "channels", "stations")}
+    out = str(tmp_path / "dims.parquet")
+    got = process(cli._warehouse_graph(dfs), dfs, seg_dims,
+                  seg_dims.output_schema, outfile=out).toPandas()
+    assert got.drop(columns="segment_db_id").to_dict("records") == [DIMS_ROW]
+    written = pd.read_parquet(out)
+    assert written.segment_db_id.tolist() == got.segment_db_id.tolist()
+
+
 def transport_with_inventory(url: str, body):
     if "level=response" in url:  # station service -> XML inventory
         return b"<FDSNStationXML>GE.STA1</FDSNStationXML>", 200

@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from stream2segment_spark.pipeline import download_pipeline
+from stream2segment_spark.pipeline import download_pipeline, stations_of
 from stream2segment_spark.sources.mseed import encode_record
 
 EV1_T = "2021-06-01T12:00:00"
@@ -189,3 +189,53 @@ def test_plan_reads_fdsn_text_once(spark, tmp_path):
     assert text_scan.search(optimized(
         spark.read.text(str(tmp_path / "events.txt"))).toString())
     assert out["segments"].count() == 4
+
+
+def test_segments_plan_runs_no_decode(result, spark):
+    """The miniSEED metrics are decoded inside the ``fetched`` checkpoint:
+    the returned segments plan (id-sync's matched/fresh split and its
+    count/offset subtrees included) holds no Python UDF evaluation."""
+    from stream2segment_spark.sources.mseed import unpack_mseed_udf
+
+    def executed(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "ArrowEvalPython" not in executed(result["segments"])
+    # the pattern does match a frame that runs the decode
+    blobs = spark.createDataFrame([(b"x",)], "data binary")
+    assert "ArrowEvalPython" in executed(
+        blobs.select(unpack_mseed_udf()(F.col("data"))))
+
+
+def test_stations_one_row_per_key(spark):
+    """Two channels of one station that disagree on end_time (and
+    lat/lon) give ONE station row: NULL end_time wins over a date, else
+    the latest; lat/lon from the lowest channel id. A station selection
+    then returns each segment once."""
+    from stream2segment_spark import cli
+    from stream2segment_spark.selectexpr import exprquery
+
+    t0, t1, t2 = (datetime(2000, 1, 1), datetime(2010, 1, 1),
+                  datetime(2012, 1, 1))
+    channels = spark.createDataFrame(
+        [(1, "GE", "STA1", "", "HHZ", 10.5, 20.5, t0, t1),
+         (2, "GE", "STA1", "", "HHN", 10.6, 20.6, t0, None),
+         (3, "GE", "STA2", "", "HHZ", 11.0, 21.0, t0, t1),
+         (4, "GE", "STA2", "", "HHN", 11.1, 21.1, t0, t2)],
+        "id long, network string, station string, location string, "
+        "channel string, latitude double, longitude double, "
+        "start_time timestamp, end_time timestamp")
+    stations = stations_of(channels)
+    got = sorted((r.station, r.latitude, r.end_time)
+                 for r in stations.collect())
+    assert got == [("STA1", 10.5, None), ("STA2", 11.0, t2)]
+
+    segments = spark.createDataFrame(
+        [(100, 1, 1), (101, 2, 1), (102, 4, 1)],
+        "id long, channel_id long, event_id long")
+    events = spark.createDataFrame([(1, "ev1")], "id long, event_id string")
+    dfs = {"segments": segments, "events": events,
+           "channels": channels, "stations": stations}
+    sel = exprquery(cli._warehouse_graph(dfs), dfs, "segments",
+                    {"station.network": "GE"})
+    assert sorted(r.id for r in sel.collect()) == [100, 101, 102]

@@ -179,3 +179,22 @@ def test_bool_garbage_raises_not_true(seismic_dfs, seismic_graph_full):
         with pytest.raises(ValueError, match="boolean"):
             exprquery(seismic_graph_full, seismic_dfs, "segments",
                       {"has_valid_data": bad})
+
+
+@pytest.mark.parametrize("conditions", [
+    {"channel.channel": "HHZ", "station.network": "GE"},
+    {"station.network": "GE", "channel.channel": "HHZ"},
+])
+def test_shared_hop_joins_channels_once(conditions, seismic_dfs, seismic_duck,
+                                        seismic_graph_full):
+    """``channel`` and the first hop of ``station`` are one join on
+    channels: in either order the plan holds two joins (channels,
+    stations), and the rows still match the oracle."""
+    got = exprquery(seismic_graph_full, seismic_dfs, "segments", conditions)
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join Inner") == 2, plan
+    assert_same_result(got, seismic_duck.sql(
+        f"""SELECT {SEG_COLS} FROM segments s
+            JOIN channels c ON s.channel_id = c.id
+            JOIN stations st ON c.station_id = st.id
+            WHERE c.channel = 'HHZ' AND st.network = 'GE'"""))
