@@ -116,9 +116,10 @@ def main() -> None:
     # total and control. Additive only — the full line below stays the
     # LAST line and is unchanged in shape, so existing parsers that
     # read the final line keep working; the summary duplicates values,
-    # it never replaces them.
+    # it never replaces them. Its metric name does not extend the full
+    # line's, so a grep for "total_query_wall_sec" finds one line.
     print(json.dumps({
-        "metric": "total_query_wall_sec_summary",
+        "metric": "summary_total_query_wall_sec",
         "value": total,
         "unit": "sec",
         "control": min(control_pre, control_post),

@@ -185,16 +185,20 @@ def triangsmooth(array, winlen_ratio: float) -> np.ndarray:
     half[:max_idx + 1] = np.round(np.arange(max_idx + 1) * winlen_ratio).astype(int)
     half[max_idx + 1:] = np.arange(n_pts - 1 - (max_idx + 1), -1, -1)
 
-    # group indices by window size; per group, accumulate the weighted sum
-    # over offsets (vectorized across the group's indices)
-    for n in np.unique(half):
-        if n < 2:
-            continue
-        idxs = np.flatnonzero(half == n)
-        acc = np.zeros(len(idxs))
-        for off in range(-(n - 1), n):
-            acc += (n - abs(off)) * arr[idxs + off]
-        out[idxs] = acc / float(n * n)
+    # one pass per offset o in [-(nmax-1), nmax-1], over every index whose
+    # half-width exceeds |o|: each index adds its (n-|o|)*arr[i+o] terms in
+    # ascending offset order, so its value is bit-identical to summing its
+    # own window alone. Sorting the smoothed indices by descending
+    # half-width makes "half > |o|" a prefix of that order.
+    idxs = np.flatnonzero(half >= 2)
+    idxs = idxs[np.argsort(-half[idxs], kind="stable")]
+    hw = half[idxs]
+    n_over = np.searchsorted(-hw, -np.arange(hw[0]), side="left")
+    acc = np.zeros(len(idxs))
+    for off in range(-(hw[0] - 1), hw[0]):
+        m = n_over[abs(off)]
+        acc[:m] += (hw[:m] - abs(off)) * arr[idxs[:m] + off]
+    out[idxs] = acc / (hw * hw).astype(float)
     return out
 
 

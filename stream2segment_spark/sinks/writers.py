@@ -47,8 +47,12 @@ def write_output(df: DataFrame, outfile: str, append: bool = False) -> None:
 
 def already_processed_ids(spark: SparkSession, outfile: str) -> DataFrame | None:
     """Distinct segment_db_id already present in ``outfile`` (None if the
-    output does not exist yet) — the K3 incremental-append input."""
-    if not os.path.exists(outfile):
+    output does not exist yet) — the K3 incremental-append input. The
+    existence check goes through the path's Hadoop FileSystem, so a URI
+    outfile (``file://``, ``hdfs://``, ``s3a://``) is found as well as a
+    plain path."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(outfile)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         return None
     if _fmt(outfile) == "csv":
         df = spark.read.option("header", True).csv(outfile)

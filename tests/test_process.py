@@ -121,6 +121,28 @@ def test_append_mode(tmp_path, seismic_dfs, seismic_graph_full):
     assert final.segment_db_id.is_unique
 
 
+def test_append_mode_uri_outfile(tmp_path, seismic_dfs, seismic_graph_full):
+    """An outfile given as a URI is found on append: the second call keeps
+    the first call's rows and adds only the new ids."""
+    out = (tmp_path / "out.parquet").as_uri()
+    assert out.startswith("file:///")
+
+    def run(selection, tag):
+        process(seismic_graph_full, seismic_dfs,
+                lambda seg, cfg: {"run": tag}, "run string",
+                segments_selection={"id": selection}, outfile=out,
+                append=True)
+
+    run("<=100", "first")
+    run("<=150", "second")
+    final = pd.read_parquet(tmp_path / "out.parquet")
+    assert final.segment_db_id.is_unique
+    assert sorted(final.segment_db_id) == list(range(1, 151))
+    runs = dict(zip(final.segment_db_id, final.run))
+    assert {runs[i] for i in range(1, 101)} == {"first"}
+    assert {runs[i] for i in range(101, 151)} == {"second"}
+
+
 def test_csv_writer_contract(tmp_path, seismic_dfs, seismic_graph_full):
     out = str(tmp_path / "results.csv")
 

@@ -19,14 +19,36 @@ import statistics
 import sys
 
 
+METRIC = "total_query_wall_sec"  # bench.py's full per-entry line
+
+
+def _full_result(text: str) -> dict:
+    """The object of bench.py's full line, picked by an exact metric-name
+    match (a captured stdout also holds the compact summary line), else
+    the whole file: a one-line local artifact or the driver's wrapper."""
+    for line in text.splitlines():
+        try:
+            obj = json.loads(line)
+        except ValueError:
+            continue
+        if isinstance(obj, dict) and obj.get("metric") == METRIC:
+            return obj
+    return json.loads(text)
+
+
 def load(path: str) -> tuple[dict[str, float], float | None]:
     with open(path) as fh:
-        d = json.load(fh)
+        d = _full_result(fh.read())
     qs = d.get("queries")
     control = d.get("control")
     if not isinstance(qs, dict):          # driver truncated-tail fallback
         import re
-        pairs = re.findall(r'"(\w+)":\s*([0-9.]+)', d.get("tail", ""))
+        tail = d.get("tail", "")
+        # only the full line's keys: a tail long enough to reach back to
+        # the summary line must not read its fields as entries
+        full = re.search(r'"metric":\s*"%s"' % METRIC, tail)
+        pairs = re.findall(r'"(\w+)":\s*([0-9.]+)',
+                           tail[full.start():] if full else tail)
         qs = {k: float(v) for k, v in pairs
               if k not in ("n", "rc", "cpus", "sf", "value", "control")}
         if control is None:               # control sits in the tail too
