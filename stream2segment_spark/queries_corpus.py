@@ -519,34 +519,36 @@ def _bpe_round_sql(r: int) -> str:
     left-to-right rewrite as gaps-and-islands SQL — overlapping matches
     only exist for left==right runs, where the even-offset positions of
     each consecutive-match island are exactly the pairs reference BPE
-    merges."""
+    merges. The CTEs are MATERIALIZED: DuckDB otherwise inlines a CTE at
+    every reference, and each round reads the previous one three times,
+    so four inlined rounds would re-run the base ~4^4 times."""
     p = r - 1
     return f"""
-   pc{r} AS (SELECT s.syms[p.i] AS lft, s.syms[p.i + 1] AS rgt,
+   pc{r} AS MATERIALIZED (SELECT s.syms[p.i] AS lft, s.syms[p.i + 1] AS rgt,
                 sum(s.freq) AS cnt
              FROM s{p} s, LATERAL (SELECT unnest(range(1, len(s.syms)))
                                    AS i) p
              GROUP BY lft, rgt),
-   pk{r} AS (SELECT lft, rgt FROM pc{r}
+   pk{r} AS MATERIALIZED (SELECT lft, rgt FROM pc{r}
              ORDER BY cnt DESC, lft, rgt LIMIT 1),
-   e{r} AS (SELECT s.word, s.freq, p.i AS pos, s.syms[p.i] AS sym
+   e{r} AS MATERIALIZED (SELECT s.word, s.freq, p.i AS pos, s.syms[p.i] AS sym
             FROM s{p} s, LATERAL (SELECT unnest(range(1, len(s.syms) + 1))
                                   AS i) p),
-   m{r} AS (SELECT s.word, p.i AS pos
+   m{r} AS MATERIALIZED (SELECT s.word, p.i AS pos
             FROM s{p} s, LATERAL (SELECT unnest(range(1, len(s.syms)))
                                   AS i) p, pk{r}
             WHERE s.syms[p.i] = pk{r}.lft
               AND s.syms[p.i + 1] = pk{r}.rgt),
-   g{r} AS (SELECT word, pos,
+   g{r} AS MATERIALIZED (SELECT word, pos,
               pos - row_number() OVER (PARTITION BY word ORDER BY pos)
                   AS grp
             FROM m{r}),
-   k{r} AS (SELECT word, pos FROM (
+   k{r} AS MATERIALIZED (SELECT word, pos FROM (
               SELECT word, pos,
                      pos - min(pos) OVER (PARTITION BY word, grp) AS off
               FROM g{r})
             WHERE off % 2 = 0),
-   s{r} AS (SELECT e.word, min(e.freq) AS freq,
+   s{r} AS MATERIALIZED (SELECT e.word, min(e.freq) AS freq,
               list(CASE WHEN k1.pos IS NOT NULL THEN e.sym || nxt.sym
                         ELSE e.sym END ORDER BY e.pos) AS syms
             FROM e{r} e
@@ -562,8 +564,8 @@ def _bpe_round_sql(r: int) -> str:
     # r7 rotation: driver-green r4-r6 (freshest possible row); slot
     # freed for an entry whose module changed after its last gate row
     # (tools/rotation_check.py selection)
-    f"""WITH w AS (SELECT unnest({_WORDS_SQL}) AS word FROM documents),
-       s0 AS (SELECT word, count(*) AS freq,
+    f"""WITH w AS MATERIALIZED (SELECT unnest({_WORDS_SQL}) AS word FROM documents),
+       s0 AS MATERIALIZED (SELECT word, count(*) AS freq,
                 regexp_extract_all(word, '.') AS syms
               FROM w GROUP BY word),
        {_bpe_round_sql(1)},
@@ -608,27 +610,27 @@ def corpus_bpe(spark, sf_dir):
     # training (the corpus_bpe round chain), joins each document's words
     # against the trained segmentation lengths, and re-runs the
     # start-offset pack replay from corpus_pack_chunks on the BPE counts.
-    f"""WITH w AS (SELECT unnest({_WORDS_SQL}) AS word FROM documents),
-       s0 AS (SELECT word, count(*) AS freq,
+    f"""WITH w AS MATERIALIZED (SELECT unnest({_WORDS_SQL}) AS word FROM documents),
+       s0 AS MATERIALIZED (SELECT word, count(*) AS freq,
                 regexp_extract_all(word, '.') AS syms
               FROM w GROUP BY word),
        {_bpe_round_sql(1)},
        {_bpe_round_sql(2)},
        {_bpe_round_sql(3)},
        {_bpe_round_sql(4)},
-       vocab AS (SELECT word, len(syms) AS n_syms FROM s4),
-       dt AS (SELECT doc_id, {_WORDS_SQL} AS wlist FROM documents),
-       dw AS (SELECT doc_id, unnest(wlist) AS word FROM dt),
-       tc AS (SELECT dw.doc_id, sum(v.n_syms) AS s
+       vocab AS MATERIALIZED (SELECT word, len(syms) AS n_syms FROM s4),
+       dt AS MATERIALIZED (SELECT doc_id, {_WORDS_SQL} AS wlist FROM documents),
+       dw AS MATERIALIZED (SELECT doc_id, unnest(wlist) AS word FROM dt),
+       tc AS MATERIALIZED (SELECT dw.doc_id, sum(v.n_syms) AS s
               FROM dw JOIN vocab v USING (word) GROUP BY dw.doc_id),
-       d AS (SELECT dt.doc_id,
+       d AS MATERIALIZED (SELECT dt.doc_id,
                 CAST(coalesce(tc.s, 0) AS BIGINT) AS n_tok
              FROM dt LEFT JOIN tc USING (doc_id)),
-       sh AS (SELECT doc_id, n_tok,
+       sh AS MATERIALIZED (SELECT doc_id, n_tok,
                 CAST({_BUCKET_SQL.format(seed='packbpe')} AS INTEGER) % 8
                     AS shard
              FROM d),
-       c AS (SELECT shard, n_tok,
+       c AS MATERIALIZED (SELECT shard, n_tok,
                 sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
                                  ROWS UNBOUNDED PRECEDING) AS cum,
                 doc_id
@@ -1410,23 +1412,23 @@ def _funnel_oracle() -> str:
            " 1, 15) AS BIGINT) % 10000")
     return f"""
     WITH RECURSIVE
-    base AS (SELECT doc_id, source,
+    base AS MATERIALIZED (SELECT doc_id, source,
                CASE WHEN doc_id % 11 = 5
                     THEN '{clone}' ELSE {derived} END AS t
              FROM documents),
-    c4 AS (SELECT doc_id, source, t,
+    c4 AS MATERIALIZED (SELECT doc_id, source, t,
              list_filter(regexp_split_to_array(t, '\\r?\\n'), {keep})
                AS kept,
              contains({fold.format(c='t')}, 'lorem ipsum') AS has_lorem,
              contains(t, '{{') AS has_brace,
              ({bad}) AS has_bad
            FROM base),
-    cleaned AS (SELECT doc_id, source,
+    cleaned AS MATERIALIZED (SELECT doc_id, source,
                   coalesce(array_to_string(kept, chr(10)), '') AS t
                 FROM c4
                 WHERE len(kept) >= 3 AND NOT has_lorem
                   AND NOT has_brace AND NOT has_bad),
-    gsig AS (SELECT doc_id,
+    gsig AS MATERIALIZED (SELECT doc_id,
                list_filter(regexp_split_to_array(t, '\\s+'),
                            w -> w != '') AS gw,
                regexp_split_to_array(t, '\\r?\\n') AS lines,
@@ -1435,7 +1437,7 @@ def _funnel_oracle() -> str:
                len(t) - len(replace(t, '…', '')) AS n_uni,
                {fold.format(c='t')} AS ft
              FROM cleaned),
-    gm AS (SELECT doc_id,
+    gm AS MATERIALIZED (SELECT doc_id,
              len(gw)::BIGINT AS n_words,
              coalesce(list_sum(list_transform(gw, x -> len(x))), 0)
                ::DOUBLE AS sum_len,
@@ -1454,7 +1456,7 @@ def _funnel_oracle() -> str:
                      regexp_split_to_array(ft, '\\s+'),
                      x -> x != ''), st)))::BIGINT AS n_stop
            FROM gsig),
-    gok AS (SELECT doc_id FROM gm
+    gok AS MATERIALIZED (SELECT doc_id FROM gm
             WHERE n_words BETWEEN 50 AND 100000
               AND (CASE WHEN n_words > 0
                         THEN sum_len / n_words::DOUBLE END) >= 3.0
@@ -1467,12 +1469,12 @@ def _funnel_oracle() -> str:
               AND (CASE WHEN n_words > 0
                         THEN n_alpha / n_words::DOUBLE END) >= 0.8
               AND n_stop >= 2),
-    gdocs AS (SELECT c.* FROM cleaned c JOIN gok USING (doc_id)),
-    ann AS (SELECT doc_id, source, t, {words} AS w,
+    gdocs AS MATERIALIZED (SELECT c.* FROM cleaned c JOIN gok USING (doc_id)),
+    ann AS MATERIALIZED (SELECT doc_id, source, t, {words} AS w,
               length(t)::DOUBLE AS n_chars,
               {fingerprint} AS fingerprint
             FROM gdocs),
-    met AS (SELECT doc_id, source, t, w, fingerprint,
+    met AS MATERIALIZED (SELECT doc_id, source, t, w, fingerprint,
               len(w) AS n_tokens,
               coalesce((SELECT max(c) FROM
                   (SELECT count(*) AS c FROM unnest(ann.w) AS u(x)
@@ -1500,44 +1502,44 @@ def _funnel_oracle() -> str:
                       THEN 1.0 ELSE 0.5 END)) / 4.0, 4) AS quality,
               {_lang_case_sql()} AS lang
             FROM ann),
-    filt AS (SELECT * FROM met
+    filt AS MATERIALIZED (SELECT * FROM met
              WHERE lang = 'en' AND quality >= 0.6
                AND n_tokens BETWEEN 5 AND 100000
                AND max_tok_run <= 0.2 * n_tokens),
-    exact AS (SELECT * FROM filt
+    exact AS MATERIALIZED (SELECT * FROM filt
               QUALIFY row_number() OVER
                 (PARTITION BY fingerprint ORDER BY doc_id) = 1),
-    sh AS (SELECT doc_id,
+    sh AS MATERIALIZED (SELECT doc_id,
              CASE WHEN len(w) >= 3 THEN
                list_distinct(list_transform(range(1, len(w) - 1),
                  i -> array_to_string(w[i:i+2], ' ')))
              ELSE [array_to_string(w, ' ')] END AS s
            FROM exact),
-    inv AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-    cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+    inv AS MATERIALIZED (SELECT doc_id, unnest(s) AS shingle FROM sh),
+    cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
              FROM inv a JOIN inv b
                ON a.shingle = b.shingle AND a.doc_id < b.doc_id),
-    pairs AS (SELECT id_a, id_b
+    pairs AS MATERIALIZED (SELECT id_a, id_b
               FROM cand JOIN sh x ON x.doc_id = id_a
                         JOIN sh y ON y.doc_id = id_b
               WHERE len(list_intersect(x.s, y.s))::DOUBLE
                     / len(list_distinct(list_concat(x.s, y.s))) >= 0.5),
-    edges AS (SELECT id_a AS a, id_b AS b FROM pairs
+    edges AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM pairs
               UNION SELECT id_b, id_a FROM pairs),
     reach(a, b) AS (SELECT a, b FROM edges
                     UNION
                     SELECT r.a, e.b FROM reach r
                     JOIN edges e ON r.b = e.a),
-    label AS (SELECT a, least(min(b), a) AS cluster_id
+    label AS MATERIALIZED (SELECT a, least(min(b), a) AS cluster_id
               FROM reach GROUP BY a),
-    dedup AS (SELECT e.* FROM exact e LEFT JOIN label l ON l.a = e.doc_id
+    dedup AS MATERIALIZED (SELECT e.* FROM exact e LEFT JOIN label l ON l.a = e.doc_id
               WHERE coalesce(l.cluster_id, e.doc_id) = e.doc_id),
-    rates AS (SELECT source, count(*) AS n_total FROM dedup
+    rates AS MATERIALIZED (SELECT source, count(*) AS n_total FROM dedup
               GROUP BY source),
-    rmin AS (SELECT min(n_total) AS n_min FROM rates),
-    r AS (SELECT source, sqrt(CAST(n_min AS DOUBLE) / n_total) AS rate
+    rmin AS MATERIALIZED (SELECT min(n_total) AS n_min FROM rates),
+    r AS MATERIALIZED (SELECT source, sqrt(CAST(n_min AS DOUBLE) / n_total) AS rate
           FROM rates, rmin),
-    mixed AS (SELECT d.* FROM dedup d JOIN r USING (source)
+    mixed AS MATERIALIZED (SELECT d.* FROM dedup d JOIN r USING (source)
               WHERE CAST({bkt.format(seed='temp')} AS DOUBLE)
                     < rate * 10000)
     SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens, quality,
@@ -1611,15 +1613,15 @@ def _funnel_incremental_oracle() -> str:
            " 1, 15) AS BIGINT) % 10000")
     return f"""
     WITH RECURSIVE
-    base AS (SELECT doc_id,
+    base AS MATERIALIZED (SELECT doc_id,
                CASE WHEN doc_id % 11 = 5 THEN '{_INC_CLONE}'
                     ELSE coalesce(text, '') END AS t
              FROM documents),
-    ann AS (SELECT doc_id, t, {words} AS w,
+    ann AS MATERIALIZED (SELECT doc_id, t, {words} AS w,
               length(t)::DOUBLE AS n_chars,
               {fingerprint} AS fingerprint
             FROM base),
-    met AS (SELECT doc_id, t, w, fingerprint,
+    met AS MATERIALIZED (SELECT doc_id, t, w, fingerprint,
               len(w) AS n_tokens,
               coalesce((SELECT max(c) FROM
                   (SELECT count(*) AS c FROM unnest(met0.w) AS u(x)
@@ -1648,37 +1650,37 @@ def _funnel_incremental_oracle() -> str:
                       THEN 1.0 ELSE 0.5 END)) / 4.0, 4) AS quality,
               {_lang_case_sql()} AS lang
             FROM ann AS met0),
-    filt AS (SELECT * FROM met
+    filt AS MATERIALIZED (SELECT * FROM met
              WHERE lang IN ('en', 'und') AND quality >= 0.6
                AND n_tokens BETWEEN 5 AND 100000
                AND max_tok_run <= 0.2 * n_tokens),
-    exact AS (SELECT * FROM filt
+    exact AS MATERIALIZED (SELECT * FROM filt
               QUALIFY row_number() OVER
                 (PARTITION BY fingerprint ORDER BY doc_id) = 1),
-    sh AS (SELECT doc_id,
+    sh AS MATERIALIZED (SELECT doc_id,
              CASE WHEN len(w) >= 3 THEN
                list_distinct(list_transform(range(1, len(w) - 1),
                  i -> array_to_string(w[i:i+2], ' ')))
              ELSE [array_to_string(w, ' ')] END AS s
            FROM exact),
-    inv AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-    cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+    inv AS MATERIALIZED (SELECT doc_id, unnest(s) AS shingle FROM sh),
+    cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
              FROM inv a JOIN inv b
                ON a.shingle = b.shingle AND a.doc_id < b.doc_id),
-    pairs AS (SELECT id_a, id_b
+    pairs AS MATERIALIZED (SELECT id_a, id_b
               FROM cand JOIN sh x ON x.doc_id = id_a
                         JOIN sh y ON y.doc_id = id_b
               WHERE len(list_intersect(x.s, y.s))::DOUBLE
                     / len(list_distinct(list_concat(x.s, y.s))) >= 0.5),
-    edges AS (SELECT id_a AS a, id_b AS b FROM pairs
+    edges AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM pairs
               UNION SELECT id_b, id_a FROM pairs),
     reach(a, b) AS (SELECT a, b FROM edges
                     UNION
                     SELECT r.a, e.b FROM reach r
                     JOIN edges e ON r.b = e.a),
-    label AS (SELECT a, least(min(b), a) AS cluster_id
+    label AS MATERIALIZED (SELECT a, least(min(b), a) AS cluster_id
               FROM reach GROUP BY a),
-    dedup AS (SELECT e.* FROM exact e LEFT JOIN label l ON l.a = e.doc_id
+    dedup AS MATERIALIZED (SELECT e.* FROM exact e LEFT JOIN label l ON l.a = e.doc_id
               WHERE coalesce(l.cluster_id, e.doc_id) = e.doc_id)
     SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens, quality, lang,
            CASE WHEN {bkt} < 8000 THEN 'train'
@@ -1851,14 +1853,14 @@ def corpus_dsir_select(spark, sf_dir):
     # bins filtered to remaining >= tok, argmin by (remaining, bin
     # index) via an order-preserving list_reduce, new bin on no fit
     # (oversized docs go negative and never admit a second doc).
-    f"""WITH RECURSIVE d0 AS (
+    f"""WITH RECURSIVE d0 AS MATERIALIZED (
           SELECT doc_id,
                  coalesce(len({_WORDS_SQL}), 0)::BIGINT AS tok,
                  CAST((CAST('0x' || substr(md5('pack:' ||
                       CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
                       % 10000) % 8 AS INTEGER) AS shard
           FROM documents),
-        r AS (SELECT shard, doc_id, tok,
+        r AS MATERIALIZED (SELECT shard, doc_id, tok,
                 row_number() OVER (PARTITION BY shard
                   ORDER BY tok DESC, doc_id) AS rn
               FROM d0),
@@ -1889,7 +1891,7 @@ def corpus_dsir_select(spark, sf_dir):
                        (b.r = a.r AND b.j < a.j) THEN b ELSE a END)).j
                    END AS pick
           ) best ON true),
-        fin AS (SELECT shard, assigned FROM st
+        fin AS MATERIALIZED (SELECT shard, assigned FROM st
                 WHERE rn = (SELECT max(rn) FROM r r2
                             WHERE r2.shard = st.shard))
         SELECT u.a.doc_id AS doc_id, fin.shard,

@@ -169,7 +169,7 @@ _MC_GRE, _MC_GIM, _MC_CHAIN = _mc_literals()
     # r7 rotation: driver-green r4-r6 (freshest possible row); slot
     # freed for an entry whose module changed after its last gate row
     # (tools/rotation_check.py selection)
-    f"""WITH RECURSIVE b AS (
+    f"""WITH RECURSIVE b AS MATERIALIZED (
           SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS x
           FROM embeddings),
         rcoef (pid, a11, a12, a21, a22, b11, b12, b21, b22,
@@ -189,17 +189,17 @@ _MC_GRE, _MC_GIM, _MC_CHAIN = _mc_literals()
           FROM rrec r JOIN rcoef c ON c.pid = r.pid
                JOIN b ON b.vec_id = r.vec_id
           WHERE r.step <= {_N - 1}),
-        rs AS (SELECT r.vec_id, r.pid, r.maxd, c.omega, c.omega2
+        rs AS MATERIALIZED (SELECT r.vec_id, r.pid, r.maxd, c.omega, c.omega2
                FROM rrec r JOIN rcoef c ON c.pid = r.pid
                WHERE r.step = {_N}),
-        bp AS (
+        bp AS MATERIALIZED (
           -- N9 bandpass replay: taper (literal Hann factors) -> direct
           -- rfft (33 bins) -> literal Butterworth gains -> inverse DFT
           SELECT vec_id,
                  list_transform(range(0, 64),
                    j -> x[j+1] * ({_BP_TAPER})[j+1]) AS tx
           FROM b),
-        sp AS (  -- raw rfft of the tapered signal, shared by bp and rr
+        sp AS MATERIALIZED (  -- raw rfft of the tapered signal, shared by bp and rr
           SELECT vec_id,
                  list_transform(range(0, 33), k ->
                    list_sum(list_transform(range(0, 64),
@@ -208,14 +208,14 @@ _MC_GRE, _MC_GIM, _MC_CHAIN = _mc_literals()
                    0.0 - list_sum(list_transform(range(0, 64),
                        n -> tx[n+1] * sin(2*pi()*k*n/64)))) AS xim
           FROM bp),
-        bpf AS (
+        bpf AS MATERIALIZED (
           SELECT vec_id,
                  list_transform(range(0, 33), k ->
                    ({_BP_GAIN})[k+1] * xre[k+1]) AS yre,
                  list_transform(range(0, 33), k ->
                    ({_BP_GAIN})[k+1] * xim[k+1]) AS yim
           FROM sp),
-        bpo AS (
+        bpo AS MATERIALIZED (
           SELECT vec_id,
                  list_transform(range(0, 64), j ->
                    (list_sum(list_transform(range(0, 33), k ->
@@ -223,7 +223,7 @@ _MC_GRE, _MC_GIM, _MC_CHAIN = _mc_literals()
                       * (yre[k+1] * cos(2*pi()*k*j/64)
                          - yim[k+1] * sin(2*pi()*k*j/64))))) / 64) AS bpx
           FROM bpf),
-        rrf AS (  -- N14: complex multiply by the literal inverse response
+        rrf AS MATERIALIZED (  -- N14: complex multiply by the literal inverse response
           SELECT vec_id,
                  list_transform(range(0, 33), k ->
                    ({_RR_GRE})[k+1] * xre[k+1]
@@ -232,7 +232,7 @@ _MC_GRE, _MC_GIM, _MC_CHAIN = _mc_literals()
                    ({_RR_GRE})[k+1] * xim[k+1]
                    + ({_RR_GIM})[k+1] * xre[k+1]) AS zim
           FROM sp),
-        rro AS (
+        rro AS MATERIALIZED (
           SELECT vec_id,
                  list_transform(range(0, 64), j ->
                    (list_sum(list_transform(range(0, 33), k ->
@@ -240,7 +240,7 @@ _MC_GRE, _MC_GIM, _MC_CHAIN = _mc_literals()
                       * (zre[k+1] * cos(2*pi()*k*j/64)
                          - zim[k+1] * sin(2*pi()*k*j/64))))) / 64) AS rrx
           FROM rrf),
-        mcf AS (  -- multi-stage chain: literal inverse-chain gains
+        mcf AS MATERIALIZED (  -- multi-stage chain: literal inverse-chain gains
           SELECT vec_id,
                  list_transform(range(0, 33), k ->
                    ({_MC_GRE})[k+1] * xre[k+1]
@@ -249,7 +249,7 @@ _MC_GRE, _MC_GIM, _MC_CHAIN = _mc_literals()
                    ({_MC_GRE})[k+1] * xim[k+1]
                    + ({_MC_GIM})[k+1] * xre[k+1]) AS mim
           FROM sp),
-        mco AS (
+        mco AS MATERIALIZED (
           SELECT vec_id,
                  list_transform(range(0, 64), j ->
                    (list_sum(list_transform(range(0, 33), k ->
@@ -257,7 +257,7 @@ _MC_GRE, _MC_GIM, _MC_CHAIN = _mc_literals()
                       * (mre[k+1] * cos(2*pi()*k*j/64)
                          - mim[k+1] * sin(2*pi()*k*j/64))))) / 64) AS mcx
           FROM mcf),
-        waf AS (  -- N11: complex multiply by the literal WA response
+        waf AS MATERIALIZED (  -- N11: complex multiply by the literal WA response
           SELECT vec_id,
                  list_transform(range(0, 33), k ->
                    ({_WA_GRE})[k+1] * xre[k+1]
@@ -266,7 +266,7 @@ _MC_GRE, _MC_GIM, _MC_CHAIN = _mc_literals()
                    ({_WA_GRE})[k+1] * xim[k+1]
                    + ({_WA_GIM})[k+1] * xre[k+1]) AS wim
           FROM sp),
-        wao AS (
+        wao AS MATERIALIZED (
           SELECT vec_id,
                  list_transform(range(0, 64), j ->
                    (list_sum(list_transform(range(0, 33), k ->
@@ -274,7 +274,7 @@ _MC_GRE, _MC_GIM, _MC_CHAIN = _mc_literals()
                       * (wre[k+1] * cos(2*pi()*k*j/64)
                          - wim[k+1] * sin(2*pi()*k*j/64))))) / 64) AS wax
           FROM waf),
-        s AS (
+        s AS MATERIALIZED (
           SELECT vec_id, x,
                  list_transform(range(0, 33), k -> sqrt(
                    pow(list_sum(list_transform(range(0, 64),
@@ -282,7 +282,7 @@ _MC_GRE, _MC_GIM, _MC_CHAIN = _mc_literals()
                  + pow(list_sum(list_transform(range(0, 64),
                        n -> x[n+1] * sin(2*pi()*k*n/64))), 2))) AS amp
           FROM b),
-        t AS (
+        t AS MATERIALIZED (
           SELECT vec_id, x, amp,
                  least(greatest(0, CAST(ceil(((vec_id % 7) * 0.017)
                                              / {_DELTA}) AS INT)), 64) AS i0,

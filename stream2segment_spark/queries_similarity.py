@@ -133,8 +133,8 @@ def _lsh_oracle(num_planes: int = 12, seed: int = 7, threshold: float = 0.4) -> 
         bits.append(f"(CASE WHEN {dot} > 0 THEN {1 << j} ELSE 0 END)")
     bucket = " + ".join(bits)
     return f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        b AS (SELECT vec_id, v, {bucket} AS bucket FROM e)
+        WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+        b AS MATERIALIZED (SELECT vec_id, v, {bucket} AS bucket FROM e)
         SELECT a.vec_id AS id_a, c.vec_id AS id_b,
                round(list_cosine_similarity(a.v, c.v), 6) AS cosine
         FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id

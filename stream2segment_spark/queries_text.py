@@ -390,22 +390,26 @@ _NORM_SQL = ("trim(regexp_replace(lower(regexp_replace({col}, "
             translate({_NORM_SQL.format(col='text')},
                       '{_HAN_SRC}', '{_HAN_DST}') AS t
           FROM documents),
-        sh AS (SELECT doc_id, CASE WHEN len(w) >= 12 THEN
+        sh AS MATERIALIZED (SELECT doc_id, CASE WHEN len(w) >= 12 THEN
             list_distinct(list_transform(range(1, len(w) - 10),
             i -> array_to_string(w[i:i+11], ' ')))
             ELSE [array_to_string(w, ' ')] END AS s
           FROM (SELECT doc_id, {DD.cjk_tokens_sql('t')} AS w FROM d)),
         inv AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-        cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        -- every pair sharing a shingle, with the number it shares: each
+        -- s is distinct, so that count is len(list_intersect(x.s, y.s))
+        -- and the union is len(x.s) + len(y.s) - n_inter, without a
+        -- list intersection for each of the ~76k candidates at sf0.01
+        cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                        count(*) AS n_inter
                  FROM inv a JOIN inv b
-                   ON a.shingle = b.shingle AND a.doc_id < b.doc_id)
+                   ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                 GROUP BY a.doc_id, b.doc_id)
         SELECT id_a, id_b,
-               round(len(list_intersect(x.s, y.s))::DOUBLE
-                     / len(list_distinct(list_concat(x.s, y.s))), 6)
+               round(n_inter::DOUBLE / (len(x.s) + len(y.s) - n_inter), 6)
                  AS jaccard
         FROM cand JOIN sh x ON x.doc_id = id_a JOIN sh y ON y.doc_id = id_b
-        WHERE len(list_intersect(x.s, y.s))::DOUBLE
-              / len(list_distinct(list_concat(x.s, y.s))) >= 0.5""",
+        WHERE n_inter::DOUBLE / (len(x.s) + len(y.s) - n_inter) >= 0.5""",
 )
 def dedup_cjk_neardup(spark, sf_dir):
     """MinHash-LSH near-dedup over SPACE-FREE CJK text with the 'cjk'
@@ -893,12 +897,12 @@ def dedup_exact_docs(spark, sf_dir):
 
 @register(
     "dedup_ngram_jaccard",
-    f"""WITH RECURSIVE sh AS {_SHINGLES_SQL},
-        inv AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-        cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+    f"""WITH RECURSIVE sh AS MATERIALIZED {_SHINGLES_SQL},
+        inv AS MATERIALIZED (SELECT doc_id, unnest(s) AS shingle FROM sh),
+        cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
                  FROM inv a JOIN inv b
                    ON a.shingle = b.shingle AND a.doc_id < b.doc_id),
-        pairs AS (
+        pairs AS MATERIALIZED (
           SELECT id_a, id_b,
                  round(len(list_intersect(x.s, y.s))::DOUBLE
                        / len(list_distinct(list_concat(x.s, y.s))), 6)
@@ -906,12 +910,12 @@ def dedup_exact_docs(spark, sf_dir):
           FROM cand JOIN sh x ON x.doc_id = id_a JOIN sh y ON y.doc_id = id_b
           WHERE len(list_intersect(x.s, y.s))::DOUBLE
                 / len(list_distinct(list_concat(x.s, y.s))) >= 0.5),
-        edges AS (SELECT id_a AS a, id_b AS b FROM pairs
+        edges AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM pairs
                   UNION SELECT id_b, id_a FROM pairs),
         reach(a, b) AS (SELECT a, b FROM edges
                         UNION
                         SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-        label AS (SELECT a, least(min(b), a) AS cluster_id
+        label AS MATERIALIZED (SELECT a, least(min(b), a) AS cluster_id
                   FROM reach GROUP BY a)
         SELECT p.id_a, p.id_b, p.jaccard, l.cluster_id
         FROM pairs p JOIN label l ON l.a = p.id_a"""
@@ -942,30 +946,30 @@ def dedup_ngram_jaccard(spark, sf_dir):
     # r7 rotation: driver-green r4-r6 (freshest possible row); slot
     # freed for an entry whose module changed after its last gate row
     # (tools/rotation_check.py selection)
-    f"""WITH RECURSIVE sh AS {_SHINGLES_SQL},
-        inv AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-        cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+    f"""WITH RECURSIVE sh AS MATERIALIZED {_SHINGLES_SQL},
+        inv AS MATERIALIZED (SELECT doc_id, unnest(s) AS shingle FROM sh),
+        cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
                  FROM inv a JOIN inv b
                    ON a.shingle = b.shingle AND a.doc_id < b.doc_id),
-        pairs AS (
+        pairs AS MATERIALIZED (
           SELECT id_a, id_b
           FROM cand JOIN sh x ON x.doc_id = id_a JOIN sh y ON y.doc_id = id_b
           WHERE len(list_intersect(x.s, y.s))::DOUBLE
                 / len(list_distinct(list_concat(x.s, y.s))) >= 0.5),
-        edges AS (SELECT id_a AS a, id_b AS b FROM pairs
+        edges AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM pairs
                   UNION SELECT id_b, id_a FROM pairs),
         reach(a, b) AS (SELECT a, b FROM edges
                         UNION
                         SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-        label AS (SELECT a, least(min(b), a) AS cluster_id
+        label AS MATERIALIZED (SELECT a, least(min(b), a) AS cluster_id
                   FROM reach GROUP BY a),
-        toks AS (SELECT doc_id,
+        toks AS MATERIALIZED (SELECT doc_id,
                         coalesce(len({_WORDS_SQL}), 0) AS n_tokens
                  FROM documents),
-        mem AS (SELECT t.doc_id, CAST(t.n_tokens AS INT) AS n_tokens,
+        mem AS MATERIALIZED (SELECT t.doc_id, CAST(t.n_tokens AS INT) AS n_tokens,
                        coalesce(l.cluster_id, t.doc_id) AS cluster_id
                 FROM toks t LEFT JOIN label l ON l.a = t.doc_id),
-        ranked AS (SELECT *,
+        ranked AS MATERIALIZED (SELECT *,
                           first_value(doc_id) OVER (
                             PARTITION BY cluster_id
                             ORDER BY n_tokens DESC, doc_id) AS canonical_id

@@ -214,23 +214,21 @@ def test_semantic_neardup_mode(spark):
     assert out_ids == base_ids - flagged
 
 
-def test_min_lm_score_stage(spark):
+def test_min_lm_score_stage(spark, curated):
     """Stage 2c: the LM floor drops exactly the filtered survivors whose
     self-scored mean transition probability is below the threshold, and
-    the funnel stays monotone."""
+    the funnel stays monotone. The baseline is the module's ``curated``
+    run: the same documents and arguments without the LM floor."""
     from stream2segment_spark.functions.lm import lm_transition_scores
-    docs = load_table(spark, SF_DIR_SMOKE, "documents")
-    base, base_funnel = curate_corpus(
-        docs, languages=("en", "und"), min_quality=0.5,
-        token_band=(5, 100_000), neardup_threshold=0.5)
+    docs, base, bf = curated
     scores = lm_transition_scores(base.select("doc_id", "text"))
     med = scores.approxQuantile("lm_score", [0.5], 0.0)[0]
     out, funnel = curate_corpus(
         docs, languages=("en", "und"), min_quality=0.5,
         token_band=(5, 100_000), neardup_threshold=0.5,
         min_lm_score=med)
+    out = out.persist()
     f = funnel.collect()[0]
-    bf = base_funnel.collect()[0]
     assert f["input"] == bf["input"]
     assert 0 < f["filtered"] < bf["filtered"]
     assert (f["filtered"] >= f["exact_dedup"] >= f["near_dedup"] > 0)
@@ -245,6 +243,7 @@ def test_min_lm_score_stage(spark):
         min_lm_score=med)
     assert ({r["doc_id"] for r in out.select("doc_id").collect()} ==
             {r["doc_id"] for r in out2.select("doc_id").collect()})
+    out.unpersist()
 
 
 def test_c4_stage_drops_and_cleans(spark):
@@ -363,20 +362,20 @@ def test_domain_cap_stage(spark):
     assert funnel.collect()[0]["filtered"] <= uncapped["filtered"]
 
 
-def test_neardup_keep_best_keeps_longest(spark):
-    docs = load_table(spark, SF_DIR_SMOKE, "documents")
-    first, _ = curate_corpus(docs, languages=("en", "und"),
-                             min_quality=0.5, token_band=(5, 100_000),
-                             neardup_threshold=0.5)
+def test_neardup_keep_best_keeps_longest(spark, curated):
+    # ``curated`` is the default keep policy on the same arguments
+    docs, first, _ = curated
     best, _ = curate_corpus(docs, languages=("en", "und"),
                             min_quality=0.5, token_band=(5, 100_000),
                             neardup_threshold=0.5, neardup_keep="best")
+    best = best.persist()
     # same survivor COUNT (one per cluster), possibly different members,
     # and the best-policy corpus is at least as long in total tokens
     assert first.count() == best.count()
     t_first = first.agg(F.sum("n_tokens")).collect()[0][0]
     t_best = best.agg(F.sum("n_tokens")).collect()[0][0]
     assert t_best >= t_first
+    best.unpersist()
 
 
 def test_neardup_keep_validation(spark):
