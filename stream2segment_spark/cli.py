@@ -75,10 +75,18 @@ def _load_cfg(path: str) -> dict:
 
 
 def _table(spark: SparkSession, cfg: dict, name: str) -> DataFrame:
+    """A stored warehouse table; a missing one reads as an empty frame
+    the optimizer can see is empty (a typed row filtered by a literal
+    false becomes an empty LocalRelation), so the joins, unions and
+    aggregates of a first download against it fold away instead of
+    running stages."""
     path = os.path.join(cfg["warehouse"], f"{name}.parquet")
     if os.path.exists(path):
         return spark.read.parquet(path)
-    return spark.createDataFrame([], _EMPTY_SCHEMAS[name])
+    cols = (c.split() for c in _EMPTY_SCHEMAS[name].split(", "))
+    return (spark.range(1)
+            .select(*[F.lit(None).cast(t).alias(n) for n, t in cols])
+            .where(F.lit(False)))
 
 
 def _write(df: DataFrame, cfg: dict, name: str) -> None:

@@ -13,7 +13,7 @@ import math
 
 import numpy as np
 
-from stream2segment_spark.funclib.ndarrays import cumsumsq, dfreq, fft
+from stream2segment_spark.funclib.ndarrays import cumsumsq
 
 
 def timeof(start: float, delta: float, index: int) -> float:
@@ -123,14 +123,6 @@ def slice_window(samples: np.ndarray, delta: float, start: float,
     if src1 > src0:
         out[src0 - i0: src1 - i0] = x[src0:src1]
     return out
-
-
-def trace_fft(samples: np.ndarray, delta: float,
-              taper_max_percentage: float = 0.05):
-    """(df, rfft) of the tapered samples (reference traces.fft)."""
-    x = taper_hann(samples, taper_max_percentage) \
-        if taper_max_percentage else np.asarray(samples, dtype=float)
-    return dfreq(x, delta), fft(x)
 
 
 # --------------------------------------------------------------------------

@@ -40,7 +40,6 @@ _RX_HOST = r"^[A-Za-z][A-Za-z0-9+.-]*://(?:[^@/?#]*@)?([^:/?#]+)"
 _RX_PORT = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*:([0-9]+)"
 _RX_PATH = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)"
 _RX_QUERY = r"\?([^#]*)"
-_RX_FRAGMENT = r"#(.*)$"
 
 TRACKING_PARAMS = r"^(utm_[A-Za-z0-9_]*|fbclid|gclid|ref)="
 
@@ -88,10 +87,6 @@ def url_path(url: Column) -> Column:
 
 def url_query(url: Column) -> Column:
     return F.regexp_extract(url, _RX_QUERY, 1)
-
-
-def url_fragment(url: Column) -> Column:
-    return F.regexp_extract(url, _RX_FRAGMENT, 1)
 
 
 def clean_query(url: Column) -> Column:

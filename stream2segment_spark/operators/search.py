@@ -32,16 +32,6 @@ from pyspark.sql import functions as F
 from stream2segment_spark.operators.dedup import get_tokenizer
 
 
-def _fs_delete(spark, path: str) -> None:
-    """Recursive delete through the Hadoop FileSystem API — works on any
-    filesystem the index lives on (local/HDFS/object store), unlike
-    shutil which only handles local paths."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(p, True)
-
-
 def _fs_swap(spark, staged: str, live: str) -> None:
     """Replace ``live`` with ``staged`` via filesystem rename (metadata
     operation on local/HDFS) instead of a Spark read+rewrite: preserves
@@ -127,18 +117,6 @@ def term_postings(docs: DataFrame, id_col: str, text_col: str,
             .groupBy("term", id_col, "dl")
             .agg(F.count("*").alias("tf")))
     return hits
-
-
-def corpus_stats(docs: DataFrame, id_col: str, text_col: str,
-                 tokenizer: str = "ascii") -> DataFrame:
-    """One-row frame ``(n_docs, avgdl)``; avgdl = total_tokens / n_docs
-    as one exact integer-to-double division."""
-    tok_expr, _ = get_tokenizer(tokenizer)
-    toked = docs.select(F.size(tok_expr(
-        F.coalesce(F.col(text_col), F.lit("")))).alias("dl"))
-    return toked.agg(
-        F.count("*").alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"))
 
 
 def bm25ish_scores(docs: DataFrame, id_col: str, text_col: str,

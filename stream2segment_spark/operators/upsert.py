@@ -11,51 +11,55 @@ keys, :214-348). On parquet (no Delta in this runtime) the equivalents are:
 - ``sync_surrogate_ids``: match rows to the existing table on the natural
   key, pull existing surrogate ids, assign fresh ids (max+1..) to the rest
   — the reference's H6 max(id)+1 trick made distributed-safe with one
-  row_number over the new rows only.
+  range-partitioned global index (``global_order_index``) over the
+  joined rows, fresh rows first.
 - ``update_skip_unchanged``: the H15 optimization (skip UPDATE when
   download_code unchanged) as a pre-filter.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from itertools import accumulate
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def global_order_index(
-    df: DataFrame, order_cols: list[str], index_col: str,
+    df: DataFrame, order_cols: list[str | Column], index_col: str,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic global 1..n row index ordered by ``order_cols``,
-    WITHOUT a single-partition window: range-partition on the order key
-    (partition p holds keys strictly below partition p+1), take a local
-    row_number per partition, then shift each partition by the cumulative
-    count of the partitions before it (a tiny n_partitions-row aggregate,
-    broadcast back). Equal to ``row_number() OVER (ORDER BY order_cols)``
-    row for row, at one range shuffle instead of one task for everything.
+    WITHOUT a single-partition window. Equal to ``row_number() OVER
+    (ORDER BY order_cols)`` row for row.
+
+    One range partitioning (partition p holds keys strictly below
+    partition p+1), sorted within each partition and tagged with
+    ``monotonically_increasing_id`` (partition id in the upper 31 bits,
+    position in the partition in the lower 33), then materialized once.
+    The partition sizes are counted on that same materialization, so the
+    offsets and the positions always describe the same partitions: two
+    separate range exchanges would each sample their own bounds, and
+    with AQE off they do disagree (duplicate and skipped indices). The
+    index is position + 1 + the partition's offset, the offsets a
+    literal array of n_partitions values — no window, no join. Like RDD
+    ``zipWithIndex``, this runs its jobs when called, not when the
+    result is used.
 
     ``order_cols`` must be a unique key (ties across a partition boundary
     would otherwise make the index partition-dependent)."""
     parts = (df.repartitionByRange(num_partitions, *order_cols)
              if num_partitions else df.repartitionByRange(*order_cols))
-    tagged = parts.withColumn("__pid", F.spark_partition_id())
-    w_local = Window.partitionBy("__pid").orderBy(*order_cols)
-    local = tagged.withColumn("__rn", F.row_number().over(w_local))
-    # cumulative offsets via a triangular self-join on the n_partitions-row
-    # counts frame (a constant-partitioned window gets its literal key
-    # folded away by Catalyst and degenerates to the unpartitioned form)
-    counts = local.groupBy("__pid").agg(F.count("*").alias("__cnt"))
-    prev = counts.select(F.col("__pid").alias("__pid2"),
-                         F.col("__cnt").alias("__cnt2"))
-    offsets = (counts.join(F.broadcast(prev),
-                           F.col("__pid2") < F.col("__pid"), "left")
-               .groupBy("__pid")
-               .agg(F.coalesce(F.sum("__cnt2"), F.lit(0)).alias("__off")))
-    # offsets is n_partitions rows — broadcast; its own window is over that
-    # tiny frame only, never the data
-    out = local.join(F.broadcast(offsets), "__pid")
-    return (out.withColumn(index_col, F.col("__rn") + F.col("__off"))
-            .drop("__pid", "__rn", "__off"))
+    tagged = (parts.sortWithinPartitions(*order_cols)
+              .withColumn("__mono", F.monotonically_increasing_id())
+              .localCheckpoint(eager=True))
+    pid = F.shiftright("__mono", 33).cast("int")
+    sizes = dict(tagged.groupBy(pid).count().collect())
+    offsets = list(accumulate(
+        (sizes.get(p, 0) for p in range(max(sizes, default=0))), initial=0))
+    pos = F.col("__mono").bitwiseAND((1 << 33) - 1)
+    offset = F.element_at(F.lit(offsets).cast("array<bigint>"), pid + 1)
+    return tagged.withColumn(index_col, pos + 1 + offset).drop("__mono")
 
 
 def _contains_map(dtype) -> bool:
@@ -138,31 +142,35 @@ def sync_surrogate_ids(
 ) -> DataFrame:
     """Fetch-or-create surrogate keys (reference syncdf, pdsql.py:214-348):
     rows of ``incoming`` matching ``existing`` on the natural key get the
-    existing id; the rest get max(existing.id) + 1, +2, ...
+    existing id; the rest get max(existing.id) + 1, +2, ... in natural-key
+    order — deterministic, and safe on immutable storage (no
+    autoincrement round-trips, reference H6).
 
-    The max(id) is a scalar aggregate (tiny collect); fresh ids come from a
-    row_number over the unmatched rows — deterministic given the natural-key
-    ordering, and safe on immutable storage (no autoincrement round-trips,
-    reference H6).
+    One left join to the stored ids, then one ``global_order_index`` over
+    every joined row ordered by (stored id IS NOT NULL, natural key): the
+    fresh rows come first and take indices 1..n_fresh in key order, and
+    each row's id is coalesce(stored id, max(id) + index). One range
+    partitioning and one read of ``incoming``, so an initial load where
+    EVERY row is fresh still distributes — no single-partition global
+    window. The index is materialized when this is called (see
+    ``global_order_index``), as is the max(id) scalar; the result is a
+    narrow projection over that materialization.
 
     The existing-ids side is NOT force-broadcast: in the reference this op
     syncs both small dims (events, stations) and the segments fact table;
     at 100 TB the latter must shuffle-join (AQE picks broadcast when the
-    ids projection is small enough). Fresh ids come from
-    ``global_order_index`` (range partition + offset), so an initial load
-    where EVERY row is fresh still distributes — no single-partition
-    global window."""
+    ids projection is small enough)."""
     ids = existing.select(*natural_key, F.col(id_col).alias("__existing_id"))
     joined = incoming.drop(id_col).join(ids, natural_key, "left")
-    max_id = existing.agg(F.max(id_col)).first()[0] or 0
-    matched = joined.filter(F.col("__existing_id").isNotNull()) \
-        .withColumn(id_col, F.col("__existing_id"))
-    fresh = global_order_index(
-        joined.filter(F.col("__existing_id").isNull()),
-        list(natural_key), "__idx")
-    fresh = (fresh.withColumn(id_col, F.col("__idx") + F.lit(max_id))
-             .drop("__idx"))
-    return matched.unionByName(fresh).drop("__existing_id")
+    # max(id) as the top id: a top-1 runs one job where a global
+    # aggregate runs two, and none at all over an empty LocalRelation
+    top = existing.select(id_col).orderBy(F.col(id_col).desc_nulls_last())
+    max_id = (top.first() or [None])[0] or 0
+    indexed = global_order_index(
+        joined, [F.col("__existing_id").isNotNull(), *natural_key], "__idx")
+    return (indexed.withColumn(id_col, F.coalesce(
+                F.col("__existing_id"), F.col("__idx") + F.lit(max_id)))
+            .drop("__existing_id", "__idx"))
 
 
 def update_skip_unchanged(

@@ -17,8 +17,9 @@ chain materializes at three points, each for a reason of its own:
 
 - the ingested dims (``events``, ``channels``) right after id-sync: the
   spatial join, the channel-key join, ``stations_of`` and the caller's
-  warehouse writes all read them, and without a checkpoint every one of
-  those actions re-parses the FDSN text and re-runs dedup and id-sync;
+  warehouse writes all read them. Id-sync already returns a narrow
+  projection over its own materialization, so no action re-parses the
+  FDSN text; the checkpoint makes each dim one plain LogicalRDD;
 - the ``fetched`` responses with their decoded miniSEED metrics: the HTTP
   fetch is not idempotent, so no second action may repeat dataselect
   requests or see a different transient response, and no branch below
@@ -27,8 +28,10 @@ chain materializes at three points, each for a reason of its own:
   they are derived from the stored segments table that the write then
   overwrites.
 
-Apart from those, only the tiny max(id) aggregates inside id-sync are
-collected.
+Id-sync (``operators.upsert.sync_surrogate_ids``) runs eagerly where it
+is called, once per dim and once for the segments: it materializes its
+range-partitioned input and collects the stored table's top id and the
+per-partition row counts (n_partitions rows). Nothing else is collected.
 """
 
 from __future__ import annotations
@@ -255,7 +258,7 @@ def download_pipeline(
                         F.lit("&ev="), F.col("event_id").cast("string")))
     fetched = fetch_rows(requests, transport=transport, threads=4)
     # the HTTP fetch is NON-IDEMPOTENT and this frame feeds several
-    # branches (sync matched/fresh, the merge union, the stats agg) and
+    # branches (skip-unchanged + id-sync, the stats agg) and
     # several returned frames — materialize once so no action repeats
     # dataselect requests or sees a different transient response; the
     # decode (metrics only) is part of it, so no branch re-runs the UDF

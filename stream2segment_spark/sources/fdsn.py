@@ -10,7 +10,7 @@ distributed with no Python in the loop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # column layouts of the FDSN text formats (event / station / channel level)
@@ -74,14 +74,6 @@ def _cast_field(col, dtype: str):
     return c.cast(dtype)
 
 
-def read_fdsn_text(
-    spark: SparkSession, path: str,
-    columns: list[tuple[str, str]], required: list[str],
-) -> DataFrame:
-    """File form of S1: read as text then parse distributed."""
-    return parse_fdsn_lines(spark.read.text(path), columns, required)
-
-
 def to_fdsn_lines(df: DataFrame, columns: list[tuple[str, str]]) -> DataFrame:
     """Inverse of the parser (serializer) — used by tests/the gate for a
     lossless round-trip check and by sinks that re-emit FDSN text.
@@ -94,8 +86,3 @@ def to_fdsn_lines(df: DataFrame, columns: list[tuple[str, str]]) -> DataFrame:
             c = F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
         cols.append(F.coalesce(c.cast("string"), F.lit("")))
     return df.select(F.concat_ws("|", *cols).alias("value"))
-
-
-def events_to_fdsn_lines(events: DataFrame) -> DataFrame:
-    """FDSN event-text serializer (the EVENT_COLS layout)."""
-    return to_fdsn_lines(events, EVENT_COLS)

@@ -4,9 +4,11 @@ Reference behavior: download/url.py:104-206 wraps a ThreadPool yielding
 ``(obj, url, data, exc, code)`` per request; download/modules/segments.py
 re-queues 413/429/503 groups with reduced concurrency.
 
-Spark shape: one request per row; ``repartition(n).mapInPandas(fetch)``
-runs executor-side thread pools, so 1000 executors x ``threads`` in-flight
-requests with no driver bottleneck. The result is never an exception:
+Spark shape: one request per row; ``mapInPandas(fetch)`` over the
+request frame's own partitions runs executor-side thread pools, so 1000
+executors x ``threads`` in-flight requests with no driver bottleneck
+(``fetch_rows`` does not repartition: the caller's partitioning decides
+how requests spread over tasks). The result is never an exception:
 every row comes back as (data, code, error) columns — the reference's
 error-tuple contract — and downstream stages filter/branch on them.
 

@@ -191,10 +191,57 @@ def test_plan_reads_fdsn_text_once(spark, tmp_path):
     assert out["segments"].count() == 4
 
 
+
+def _executed_nodes(spark, fn) -> list[str]:
+    """The descriptions of every plan node of the SQL executions that
+    ``fn()`` runs (their final adaptive plans), read from Spark's SQL
+    status store."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    fn()
+    nodes = []
+    for e in executions():
+        if e.executionId() > before:
+            graph = store.planGraph(e.executionId()).allNodes()
+            nodes += [graph.apply(i).desc() for i in range(graph.size())]
+    return nodes
+
+
+def test_ingest_events_reads_text_once(spark, tmp_path):
+    """Plan-shape sentinel for id-sync: ``ingest_events`` over a text file,
+    materialized as ``download_pipeline`` does, scans the file once and
+    range-partitions once, with no nested-loop join, whether the stored
+    events table is missing (first download) or holds rows. Every
+    execution counts, the eager ones inside id-sync included."""
+    from stream2segment_spark import cli
+    from stream2segment_spark.pipeline import ingest_events
+    (tmp_path / "events.txt").write_text("\n".join(EVENT_LINES))
+    missing = cli._table(spark, {"warehouse": str(tmp_path / "wh")},
+                         "events")
+    stored = spark.createDataFrame([(7, "ev2"), (3, "old")],
+                                   "id long, event_id string")
+    for existing, want in ((missing, {"ev1": 1, "ev2": 2}),
+                           (stored, {"ev1": 8, "ev2": 7})):
+        out = []
+        nodes = _executed_nodes(spark, lambda: out.append(ingest_events(
+            spark.read.text(str(tmp_path / "events.txt")), existing)
+            .localCheckpoint(eager=True)))
+        assert sum(d.startswith("FileScan text") for d in nodes) == 1
+        assert sum("rangepartitioning" in d for d in nodes) <= 1
+        assert not any("BroadcastNestedLoopJoin" in d for d in nodes)
+        assert {r["event_id"]: r["id"] for r in out[0].collect()} == want
+
 def test_segments_plan_runs_no_decode(result, spark):
     """The miniSEED metrics are decoded inside the ``fetched`` checkpoint:
-    the returned segments plan (id-sync's matched/fresh split and its
-    count/offset subtrees included) holds no Python UDF evaluation."""
+    the returned segments plan (skip-unchanged and id-sync included)
+    holds no Python UDF evaluation."""
     from stream2segment_spark.sources.mseed import unpack_mseed_udf
 
     def executed(df):

@@ -174,6 +174,11 @@ def test_random_projection_exact_bit_equality_and_bind_sentinel(spark):
         exact=True)._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("1234.5678") == 1, plan
     assert "struct(v" in plan or "named_struct" in plan, plan
+
+
+def test_random_projection_rejects_dim_mismatch(spark):
+    """An embedding whose length differs from ``in_dim`` fails with an
+    error naming ``in_dim``."""
     import pytest as _pytest
 
     from stream2segment_spark.functions.embeddings import (

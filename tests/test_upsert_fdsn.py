@@ -48,6 +48,60 @@ def test_sync_surrogate_ids_empty_existing(spark):
     assert rows == {"a": 1, "b": 2}
 
 
+
+def test_surrogate_ids_exact_with_aqe_off(spark):
+    """Regression: ``global_order_index`` took its partition sizes from
+    one range exchange and its row positions from another. Each exchange
+    samples its own bounds, and with AQE off they were not one reused
+    exchange when the input carries a non-key column (the sizes branch
+    prunes it), so they disagreed: duplicate and skipped ids. Sizes and positions now come from one
+    materialized partitioning, so the ids are exact whatever the AQE
+    setting: 1..n for an index, and stored ids plus max+1.. in key order
+    for an id sync."""
+    import random
+
+    from stream2segment_spark.operators.upsert import global_order_index
+    keys = [f"k{i:05d}" for i in range(2400)]
+    random.Random(7).shuffle(keys)
+    ordered = sorted(keys)
+    stored = {k: 10 * i + 3 for i, k in enumerate(ordered[::3])}
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        incoming = spark.createDataFrame(
+            [(k, float(i)) for i, k in enumerate(keys)],
+            "key string, v double").repartition(8, "key")
+        existing = spark.createDataFrame(
+            [(i, k) for k, i in stored.items()], "id long, key string")
+        for _ in range(3):
+            idx = global_order_index(incoming, ["key"], "idx")
+            got = {r["key"]: r["idx"] for r in idx.collect()}
+            assert got == {k: i + 1 for i, k in enumerate(ordered)}
+            out = sync_surrogate_ids(existing, incoming, ["key"])
+            got = {r["key"]: r["id"] for r in out.collect()}
+            top = max(stored.values())
+            fresh = [k for k in ordered if k not in stored]
+            assert got == {**stored, **{k: top + i + 1
+                                        for i, k in enumerate(fresh)}}
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def test_sync_against_missing_table_plans_no_join(spark, tmp_path):
+    """A missing warehouse table reads as an empty LocalRelation
+    (``cli._table``), so the optimizer drops id-sync's join to the stored
+    ids instead of running it; the ids are max(id)=0 + 1.. in key order."""
+    from stream2segment_spark import cli
+    existing = cli._table(spark, {"warehouse": str(tmp_path)}, "events")
+    incoming = spark.createDataFrame([("b",), ("a",)], "event_id string")
+    out = sync_surrogate_ids(existing, incoming, ["event_id"])
+    assert "Join" not in out._jdf.queryExecution().optimizedPlan().toString()
+    assert {r["event_id"]: r["id"] for r in out.collect()} == {"a": 1, "b": 2}
+    # the pattern does match the plan of a join against a stored table
+    stored = spark.createDataFrame([(1, "a")], "id long, event_id string")
+    assert "Join" in incoming.join(stored, "event_id", "left") \
+        ._jdf.queryExecution().optimizedPlan().toString()
+
 def test_update_skip_unchanged(spark):
     existing = spark.createDataFrame(
         [(1, 200), (2, 404), (3, None)], "id long, download_code int")
