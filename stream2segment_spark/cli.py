@@ -46,6 +46,7 @@ import argparse
 import importlib
 import os
 import sys
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -131,7 +132,7 @@ def cmd_download(spark: SparkSession, cfg: dict, cfg_text: str = "") -> int:
 
     from stream2segment_spark import warehouse as wh
     from stream2segment_spark.pipeline import (
-        download_pipeline, fetch_inventories, stations_of)
+        _concurrently, download_pipeline, fetch_inventories, stations_of)
     from stream2segment_spark.reporting import render_text
 
     radius = cfg.get("search_radius", {})
@@ -206,14 +207,22 @@ def cmd_download(spark: SparkSession, cfg: dict, cfg_text: str = "") -> int:
         stations = fetch_inventories(
             stations, out["channels"], out["segments"],
             base_url=station_url, transport=transport)
-    for name in ("events", "channels", "segments"):
-        _write(out[name], cfg, name)
-    _write(stations, cfg, "stations")
     stats = out["segments"].select(
         F.lit("all").alias("row"),
         F.col("download_code").alias("code")).groupBy("row", "code") \
         .agg(F.count("*").alias("n"))
-    report = render_text(stats)
+    # the four writes and the stats collect are independent actions over
+    # the checkpointed frames (stations: the lazy frame over the channels
+    # checkpoint, run once by its write), so they run at the same time.
+    # If one write fails, the others may already have landed, as a
+    # failure between sequential writes could leave them before; the
+    # execution is recorded only once all five have succeeded
+    tables = {**out, "stations": stations}
+    *_, report = _concurrently(
+        spark,
+        *[partial(_write, tables[name], cfg, name)
+          for name in ("events", "channels", "segments", "stations")],
+        partial(render_text, stats))
     print(report)
     wh.record_download(cfg["warehouse"], log_text=report,
                        config_text=cfg_text or yaml.safe_dump(cfg), did=did)

@@ -48,7 +48,10 @@ from pyspark.sql import functions as F
 
 # Measurement hook (tools/ab_barrier.py): same-session interleaved
 # A/B arms rebuild their DataFrames with the barrier off. Not a
-# production switch — the default is always on.
+# production switch — the default is always on. It is read when a plan
+# is BUILT (each opt_barrier call), so it must not be flipped while
+# another thread builds plans: the download pass builds its dims on two
+# threads at once (pipeline._concurrently).
 DISABLED = False
 
 # Fixed seed: the barrier must be non-deterministic to the OPTIMIZER

@@ -32,10 +32,22 @@ Id-sync (``operators.upsert.sync_surrogate_ids``) runs eagerly where it
 is called, once per dim and once for the segments: it materializes its
 range-partitioned input and collects the stored table's top id and the
 per-partition row counts (n_partitions rows). Nothing else is collected.
+
+The two dims are ingested concurrently (``_concurrently``): each branch
+is parse -> dedup -> id-sync -> checkpoint, reads only its own FDSN text
+and its own stored table, and neither reads the other's output, so they
+run as two threads of Spark actions instead of one after the other. At
+small inputs a pass waits on per-action latency (driver planning, job
+scheduling), not on data, and the overlap hides part of it. A failed
+branch surfaces only after the other branch has ended: its exception is
+re-raised then, and no thread is left running.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,6 +63,29 @@ from stream2segment_spark.sources.fetch import fetch_rows
 from stream2segment_spark.sources.mseed import unpack_mseed_udf
 
 MSEED_DECODE_ERR = -2  # reference code for unreadable waveform data
+
+
+def _concurrently(spark: SparkSession, *thunks) -> list:
+    """Run independent Spark actions, one thread each, and return their
+    results in argument order. Each thread inherits the caller's local
+    properties (job group, description, scheduler pool) and session tags,
+    so its jobs are the caller's as on one thread. If any thunk raised,
+    the first one's exception (in argument order) is re-raised once every
+    thunk has finished.
+
+    Each thunk is wrapped on its own: one wrapper hands every thread the
+    SAME copy of the properties, so one action's SQL execution id would
+    show through in (and be reset under) another's. With pinned-thread
+    mode off (PYSPARK_PIN_THREAD=false) properties do not follow Python
+    threads at all, and PySpark hands back the session in place of a
+    wrapper; the thunks then run as they are."""
+    targets = []
+    for t in thunks:
+        wrap = inheritable_thread_target(spark)
+        targets.append(t if wrap is spark else wrap(t))
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(t) for t in targets]
+    return [f.result() for f in futures]
 
 
 def ingest_events(event_lines: DataFrame, existing_events: DataFrame) -> DataFrame:
@@ -208,11 +243,14 @@ def download_pipeline(
     merge, and stored rows without one (a warehouse predating the column)
     stay NULL. Without it, written rows carry no stamp."""
     # checkpointed right after ingest: every downstream action reads one
-    # materialization instead of re-parsing the FDSN text
-    events = ingest_events(event_lines, existing_events) \
-        .localCheckpoint(eager=True)
-    channels = ingest_channels(channel_lines, existing_channels,
-                               **channel_filters).localCheckpoint(eager=True)
+    # materialization instead of re-parsing the FDSN text; the two dims
+    # are independent, so both branches run at the same time
+    events, channels = _concurrently(
+        spark,
+        lambda: ingest_events(event_lines, existing_events)
+        .localCheckpoint(eager=True),
+        lambda: ingest_channels(channel_lines, existing_channels,
+                                **channel_filters).localCheckpoint(eager=True))
     stations = stations_of(channels)
 
     ev = events.select(

@@ -6,6 +6,7 @@ tests are the model)."""
 from __future__ import annotations
 
 import sys
+import threading
 from datetime import datetime, timezone
 from pathlib import Path
 
@@ -416,6 +417,66 @@ def test_download_records_execution(warehouse, spark):
     segs = spark.read.parquet(str(tmp / "wh" / "segments.parquet"))
     assert "download_id" in segs.columns
     assert segs.filter("download_id IS NULL").count() == 0
+
+
+def _fresh_cfg(warehouse, tmp_path) -> dict:
+    """The module fixture's download config over an empty warehouse."""
+    _, cfg_path = warehouse
+    return {**yaml.safe_load(cfg_path.read_text()),
+            "warehouse": str(tmp_path / "wh")}
+
+
+def _mark_job(spark, group: str) -> int:
+    """Run one trivial job in job group ``group``; return its id."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    sc.parallelize([0], 1).count()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    (job,) = sc.statusTracker().getJobIdsForGroup(group)
+    return job
+
+
+def test_download_jobs_keep_callers_job_group(warehouse, spark, tmp_path,
+                                              capsys):
+    """Every job a download pass starts, those of its concurrent ingest
+    and writes included, carries the caller's job group (jobs started on
+    a plain thread would carry none): cancelling the group cancels the
+    whole pass, and per-group accounting sees all of it."""
+    cfg = _fresh_cfg(warehouse, tmp_path)
+    sc = spark.sparkContext
+    try:
+        start = _mark_job(spark, "dl-group-start")
+        sc.setJobGroup("dl-group", "download pass")
+        assert cli.cmd_download(spark, cfg) == 0
+        end = _mark_job(spark, "dl-group-end")
+    finally:
+        sc._jsc.clearJobGroup()
+    capsys.readouterr()
+    in_group = set(sc.statusTracker().getJobIdsForGroup("dl-group"))
+    assert in_group and in_group == set(range(start + 1, end))
+
+
+class _ChannelsDown(Exception):
+    pass
+
+
+def test_download_branch_failure_surfaces(warehouse, spark, tmp_path,
+                                          monkeypatch):
+    """A failing ingest branch raises its own exception out of
+    cmd_download once the other branch has ended: no table is written
+    and no helper thread outlives the call."""
+    from stream2segment_spark import pipeline
+
+    def down(*args, **kwargs):
+        raise _ChannelsDown("station service unreachable")
+
+    monkeypatch.setattr(pipeline, "ingest_channels", down)
+    cfg = _fresh_cfg(warehouse, tmp_path)
+    before = set(threading.enumerate())
+    with pytest.raises(_ChannelsDown):
+        cli.cmd_download(spark, cfg)
+    assert not list((tmp_path / "wh").glob("*.parquet"))
+    assert [t for t in threading.enumerate() if t not in before] == []
 
 
 def test_dl_summary_lists_executions(warehouse, capsys):

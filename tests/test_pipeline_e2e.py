@@ -5,13 +5,16 @@ tests/download/test_download.py."""
 
 from __future__ import annotations
 
+import threading
+import time
 from datetime import datetime, timezone
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from stream2segment_spark.pipeline import download_pipeline, stations_of
+from stream2segment_spark.pipeline import (
+    _concurrently, download_pipeline, stations_of)
 from stream2segment_spark.sources.mseed import encode_record
 
 EV1_T = "2021-06-01T12:00:00"
@@ -286,3 +289,59 @@ def test_stations_one_row_per_key(spark):
     sel = exprquery(cli._warehouse_graph(dfs), dfs, "segments",
                     {"station.network": "GE"})
     assert sorted(r.id for r in sel.collect()) == [100, 101, 102]
+
+
+def test_concurrently_gives_each_thread_its_own_properties(spark):
+    """Every thread of pipeline._concurrently starts from the caller's
+    local properties (its job group), and what one action sets on its
+    thread (a SQL execution id, a description) does not show in the
+    other's: one shared copy would let a finishing action reset the
+    execution id under one still running."""
+    sc = spark.sparkContext
+    both_set = threading.Barrier(2, timeout=60)
+
+    def branch(tag):
+        def run():
+            sc.setLocalProperty("s2s.test.branch", tag)
+            both_set.wait()
+            return (sc.getLocalProperty("s2s.test.branch"),
+                    sc.getLocalProperty("spark.jobGroup.id"))
+        return run
+
+    sc.setJobGroup("concurrently-props", "test")
+    try:
+        got = _concurrently(spark, branch("a"), branch("b"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert got == [("a", "concurrently-props"), ("b", "concurrently-props")]
+    assert sc.getLocalProperty("s2s.test.branch") is None
+
+
+def test_concurrently_raises_after_every_action_ends(spark):
+    """Results come back in argument order; a failed action's exception
+    is raised only once the others have finished."""
+    ended = []
+
+    def slow():
+        time.sleep(0.3)
+        ended.append("slow")
+        return spark.range(3).count()
+
+    def fails():
+        raise LookupError("no such table")
+
+    assert _concurrently(spark, slow, lambda: "b") == [3, "b"]
+    ended.clear()
+    with pytest.raises(LookupError):
+        _concurrently(spark, fails, slow)
+    assert ended == ["slow"]
+
+
+def test_concurrently_without_pinned_threads(spark, monkeypatch):
+    """With pinned-thread mode off, PySpark's inheritable_thread_target
+    returns its argument (here the session) unchanged: the actions still
+    run, unwrapped."""
+    from stream2segment_spark import pipeline
+    monkeypatch.setattr(pipeline, "inheritable_thread_target",
+                        lambda f=None: f)
+    assert _concurrently(spark, lambda: 1, lambda: 2) == [1, 2]

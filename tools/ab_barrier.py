@@ -61,27 +61,30 @@ def main() -> int:
 
     results: dict[str, dict[str, list[float]]] = {
         e: {"on": [], "off": []} for e in args.entries}
-    for alt in range(args.alternations):
-        print(f"-- alternation {alt}  control={control():.3f}s",
-              flush=True)
-        # arm order flips per alternation: a decaying host burst would
-        # otherwise systematically charge the first arm
-        arms = (("on", False), ("off", True))
-        if alt % 2:
-            arms = arms[::-1]
-        for arm, disabled in arms:
-            PLAN.DISABLED = disabled
-            for entry in args.entries:
-                best = float("inf")
-                for _ in range(args.runs):
-                    t0 = time.perf_counter()
-                    qs[entry](spark, args.sf_dir).write.format("noop") \
-                        .mode("overwrite").save()
-                    best = min(best, time.perf_counter() - t0)
-                spark.catalog.clearCache()
-                results[entry][arm].append(best)
-                print(f"   {entry:34s} {arm:3s} {best:8.3f}s", flush=True)
-    PLAN.DISABLED = False
+    try:
+        for alt in range(args.alternations):
+            print(f"-- alternation {alt}  control={control():.3f}s",
+                  flush=True)
+            # arm order flips per alternation: a decaying host burst
+            # would otherwise systematically charge the first arm
+            arms = (("on", False), ("off", True))
+            if alt % 2:
+                arms = arms[::-1]
+            for arm, disabled in arms:
+                PLAN.DISABLED = disabled
+                for entry in args.entries:
+                    best = float("inf")
+                    for _ in range(args.runs):
+                        t0 = time.perf_counter()
+                        qs[entry](spark, args.sf_dir).write.format("noop") \
+                            .mode("overwrite").save()
+                        best = min(best, time.perf_counter() - t0)
+                    spark.catalog.clearCache()
+                    results[entry][arm].append(best)
+                    print(f"   {entry:34s} {arm:3s} {best:8.3f}s",
+                          flush=True)
+    finally:  # an interrupted arm must not leave the barrier off
+        PLAN.DISABLED = False
     print(f"-- final control={control():.3f}s")
     for entry in args.entries:
         on, off = results[entry]["on"], results[entry]["off"]

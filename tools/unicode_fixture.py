@@ -10,12 +10,13 @@ Java full case mapping vs DuckDB/utf8proc 1:1 lower(), regex class
 behavior on astral chars, whitespace classes — is exercised by some row,
 while other rows stay pure ASCII so the sweep also checks mixed data.
 
-Usage: python tools/unicode_fixture.py [target_dir]   (default
+Usage: python tools/unicode_fixture.py [target_dir | --out target_dir]  (default
 /tmp/sf_unicode) — then ``python tools/gate_mirror.py --sf-dir <target>``.
 """
 
 from __future__ import annotations
 
+import argparse
 import shutil
 import sys
 from pathlib import Path
@@ -50,7 +51,13 @@ SNIPPETS = [
 
 
 def main() -> int:
-    dst = Path(sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf_unicode")
+    ap = argparse.ArgumentParser()
+    ap.add_argument("target", nargs="?", help="target directory")
+    ap.add_argument("--out", help="target directory (as permuted_fixture.py)")
+    args = ap.parse_args()
+    if args.target and args.out:
+        ap.error("give the target directory once: positional or --out")
+    dst = Path(args.out or args.target or "/tmp/sf_unicode")
     dst.mkdir(parents=True, exist_ok=True)
     for p in SRC.glob("*.parquet"):
         if p.stem != "documents":
