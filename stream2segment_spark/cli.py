@@ -75,19 +75,44 @@ def _load_cfg(path: str) -> dict:
     return cfg
 
 
+def _tables(spark: SparkSession, cfg: dict, names) -> dict[str, DataFrame]:
+    """The stored warehouse tables ``names``, by name.
+
+    Each stored table is read on its own thread
+    (``pipeline._concurrently``): ``spark.read.parquet`` infers the
+    schema from the file footers with a Spark job of its own, and at the
+    sizes a pass reads, those jobs are mostly fixed latency, so they
+    overlap instead of queuing one after another.
+
+    Which tables exist is read once, from one listing of the warehouse
+    through its Hadoop FileSystem, so a URI warehouse (``file://``,
+    ``hdfs://``, ``s3a://``) is found as well as a plain path. A missing
+    table reads as an empty frame the optimizer can see is empty (a
+    typed row filtered by a literal false becomes an empty
+    LocalRelation), so the joins, unions and aggregates of a first
+    download against it fold away instead of running stages."""
+    from stream2segment_spark.pipeline import _concurrently
+    root = spark._jvm.org.apache.hadoop.fs.Path(cfg["warehouse"])
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    stored = ({st.getPath().getName() for st in fs.listStatus(root)}
+              if fs.exists(root) else set())
+
+    def read_table(name: str) -> DataFrame:
+        if f"{name}.parquet" in stored:
+            return spark.read.parquet(
+                os.path.join(cfg["warehouse"], f"{name}.parquet"))
+        cols = (c.split() for c in _EMPTY_SCHEMAS[name].split(", "))
+        return (spark.range(1)
+                .select(*[F.lit(None).cast(t).alias(n) for n, t in cols])
+                .where(F.lit(False)))
+
+    return dict(zip(names, _concurrently(
+        spark, *[partial(read_table, n) for n in names])))
+
+
 def _table(spark: SparkSession, cfg: dict, name: str) -> DataFrame:
-    """A stored warehouse table; a missing one reads as an empty frame
-    the optimizer can see is empty (a typed row filtered by a literal
-    false becomes an empty LocalRelation), so the joins, unions and
-    aggregates of a first download against it fold away instead of
-    running stages."""
-    path = os.path.join(cfg["warehouse"], f"{name}.parquet")
-    if os.path.exists(path):
-        return spark.read.parquet(path)
-    cols = (c.split() for c in _EMPTY_SCHEMAS[name].split(", "))
-    return (spark.range(1)
-            .select(*[F.lit(None).cast(t).alias(n) for n, t in cols])
-            .where(F.lit(False)))
+    """One stored warehouse table (see :func:`_tables`)."""
+    return _tables(spark, cfg, (name,))[name]
 
 
 def _write(df: DataFrame, cfg: dict, name: str) -> None:
@@ -172,13 +197,14 @@ def cmd_download(spark: SparkSession, cfg: dict, cfg_text: str = "") -> int:
     # this execution's id, stamped on the segments it writes (the stored
     # ones keep theirs; see download_pipeline)
     did = wh._next_id(wh.read_small(cfg["warehouse"], "downloads"))
+    stored = _tables(spark, cfg, ("events", "channels", "segments"))
     out = download_pipeline(
         spark,
         _event_lines(spark, cfg["events_file"]),
         channel_lines,
-        _table(spark, cfg, "events"),
-        _table(spark, cfg, "channels"),
-        _table(spark, cfg, "segments"),
+        stored["events"],
+        stored["channels"],
+        stored["segments"],
         transport=transport,
         tt_udf=tt_udf,
         minmag=radius.get("minmag", 3.0),
@@ -297,8 +323,8 @@ def cmd_process(spark: SparkSession, cfg: dict, pyfunc_spec: str,
     # grammar (flat, derived and dotted attributes), the pyfunc sees the
     # segment with its event, channel and station, and '--append -o out'
     # processes only the segments 'out' does not hold yet
-    dfs = {name: _table(spark, cfg, name)
-           for name in ("segments", "events", "channels", "stations")}
+    dfs = _tables(spark, cfg,
+                  ("segments", "events", "channels", "stations"))
     result = process(_warehouse_graph(dfs), dfs, func, schema,
                      cfg.get("segments_selection") or {},
                      config=cfg.get("config"), outfile=outfile,
@@ -340,8 +366,8 @@ def _decoded_selection(spark: SparkSession, cfg: dict,
     # the same selection grammar as process (the reference GUI shows the
     # config's selected segments), then the has-data floor
     from stream2segment_spark.selectexpr import exprquery
-    dfs = {name: _table(spark, cfg, name)
-           for name in ("segments", "events", "channels", "stations")}
+    dfs = _tables(spark, cfg,
+                  ("segments", "events", "channels", "stations"))
     segs = exprquery(_warehouse_graph(dfs), dfs, "segments",
                      cfg.get("segments_selection") or {})
     segs = segs.filter(

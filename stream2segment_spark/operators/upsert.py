@@ -88,14 +88,20 @@ def merge_latest_wins(
     partition-wise (overwrite-by-partition is idempotent); with Delta
     available, use ``try_delta_merge`` instead.
 
-    Duplicate keys WITHIN a side (two incoming rows for one natural
-    key) tie-break deterministically on a content hash of the non-key
+    Duplicate incoming keys (two incoming rows for one natural key)
+    tie-break deterministically on a content hash of the non-key
     columns — without it row_number's winner depends on shuffle order
     and a backfill would not reproduce the merged table byte-for-byte.
-    Map-typed payload columns are excluded from that hash (Spark
-    disallows hashing MapType — its iteration order is undefined, so a
-    map hash could not be deterministic anyway); rows identical except
-    for a map column therefore tie-break on the remaining payload.
+    Only incoming rows are hashed: ``existing`` is the output of an
+    earlier merge, so it is unique on the natural key and its rows never
+    tie with each other, and an incoming row always beats a stored one.
+    The hash is NULL on the stored side, which the optimizer folds into
+    that side's projection, so a stored table's payload (the segments'
+    ``data`` blob) is never hashed. Map-typed payload columns are
+    excluded from that hash (Spark disallows hashing MapType — its
+    iteration order is undefined, so a map hash could not be
+    deterministic anyway); rows identical except for a map column
+    therefore tie-break on the remaining payload.
     """
     ex = existing.withColumn(order_col, F.lit(0))
     inc = incoming.withColumn(order_col, F.lit(1))
@@ -111,7 +117,8 @@ def merge_latest_wins(
             f"({payload_cols}) — no content-hash tie-break is possible, "
             "so the winner among same-side duplicate keys is "
             "shuffle-order-dependent (NOT replayable)", stacklevel=2)
-    tiebreak = (F.xxhash64(*[F.col(c) for c in hashable])
+    tiebreak = (F.when(F.col(order_col) == 1,
+                       F.xxhash64(*[F.col(c) for c in hashable]))
                 if hashable else F.lit(0))
     w = Window.partitionBy(*natural_key).orderBy(
         F.col(order_col).desc(), tiebreak.desc())

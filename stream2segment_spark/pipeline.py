@@ -45,11 +45,13 @@ re-raised then, and no thread is left running.
 
 from __future__ import annotations
 
+import sys
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.traceback_utils import SCCallSiteSync
 
 from stream2segment_spark.operators.dedup import exact_dedup
 from stream2segment_spark.operators.joins import prepare_for_download_diff
@@ -65,6 +67,14 @@ from stream2segment_spark.sources.mseed import unpack_mseed_udf
 MSEED_DECODE_ERR = -2  # reference code for unreadable waveform data
 
 
+def _with_call_site(spark: SparkSession, thunk, site: str):
+    def run():
+        for form in ("callSite.short", "callSite.long"):
+            spark.sparkContext.setLocalProperty(form, site)
+        return thunk()
+    return run
+
+
 def _concurrently(spark: SparkSession, *thunks) -> list:
     """Run independent Spark actions, one thread each, and return their
     results in argument order. Each thread inherits the caller's local
@@ -78,12 +88,27 @@ def _concurrently(spark: SparkSession, *thunks) -> list:
     show through in (and be reset under) another's. With pinned-thread
     mode off (PYSPARK_PIN_THREAD=false) properties do not follow Python
     threads at all, and PySpark hands back the session in place of a
-    wrapper; the thunks then run as they are."""
+    wrapper; the thunks then run as they are.
+
+    Each thread also sets its own call site, ``<thunk> at <caller
+    file>:<line>``, so the jobs and SQL executions of every thunk name
+    the program line that started them in the status store and event
+    log. PySpark's own call-site capture cannot: it keeps ONE
+    process-wide nesting counter, so an action started while another
+    thread is inside one sets no call site, and one that does set it
+    names the thread pool. The caller holds that counter above zero for
+    the section, so no thunk's action overwrites or clears its
+    thread's site."""
+    caller = sys._getframe(1)
+    where = f"{caller.f_code.co_filename}:{caller.f_lineno}"
     targets = []
     for t in thunks:
         wrap = inheritable_thread_target(spark)
-        targets.append(t if wrap is spark else wrap(t))
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        name = getattr(getattr(t, "func", t), "__name__", "thunk")
+        targets.append(t if wrap is spark else wrap(
+            _with_call_site(spark, t, f"{name} at {where}")))
+    with SCCallSiteSync(spark.sparkContext), \
+            ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in targets]
     return [f.result() for f in futures]
 

@@ -11,6 +11,14 @@ and station, execution is ``mapInPandas`` over Arrow batches, and the writer
 is a distributed ``df.write``. ``s2s process`` (``cli.cmd_process``) runs
 :func:`process` itself, so the CLI and the library share one path.
 
+Append mode (the reference's ``already_processed_segments``) is one
+``left_anti`` join of the selection against the ids the output already
+holds (``sinks.writers.already_processed_ids``). That side is a one-column
+scan read with the writer contract's schema (no footer-inference job) and
+no distinct (the anti join does not mind duplicate ids), so it runs no
+aggregate and no shuffle of its own; while the ids are small enough to
+broadcast, the selected segments are not shuffled for it either.
+
 Error semantics (X2, process/main.py:581-631): ``pyfunc`` raising
 :class:`SkipSegment` skips that row (collected to a side channel);
 any other exception aborts the whole job.
@@ -155,7 +163,10 @@ def process(
     joins -> append-mode anti-join (K3) -> mapInPandas (X1/X2) -> optional
     CSV/parquet sink (K1/K2). Skipped segments are neither returned nor
     written. ``append`` with an existing ``outfile`` processes only the
-    segments it does not hold yet and adds their rows to it.
+    segments it does not hold yet and adds their rows to it: the ids the
+    output holds are read as one schema-given column (no footer job) and
+    anti-joined as they are (no distinct), and the result is materialized
+    before the write, because its plan reads the file it appends to.
 
     Default selection mirrors the reference's
     ``{'has_valid_data': 'true', 'maxgap_numsamples': '(-0.5, 0.5)'}``

@@ -199,7 +199,8 @@ class SelectionCompiler:
                 continue
             self._joined.add(path)
             dim = self.dfs[hop.table]
-            dim = dim.select([F.col(c).alias(right_prefix + c) for c in dim.columns])
+            # one positional rename, not one py4j alias per column
+            dim = dim.toDF(*[right_prefix + c for c in dim.columns])
             if rel.broadcast:
                 dim = F.broadcast(dim)
             cond = None

@@ -46,16 +46,23 @@ def write_output(df: DataFrame, outfile: str, append: bool = False) -> None:
 
 
 def already_processed_ids(spark: SparkSession, outfile: str) -> DataFrame | None:
-    """Distinct segment_db_id already present in ``outfile`` (None if the
-    output does not exist yet) — the K3 incremental-append input. The
-    existence check goes through the path's Hadoop FileSystem, so a URI
-    outfile (``file://``, ``hdfs://``, ``s3a://``) is found as well as a
-    plain path."""
+    """The segment_db_id values already present in ``outfile`` (None if
+    the output does not exist yet) — the K3 incremental-append input,
+    meant for a ``left_anti`` join: an id written twice is returned
+    twice, which that join does not mind, so no distinct (a shuffle and
+    an aggregate) runs. The existence check goes through the path's
+    Hadoop FileSystem, so a URI outfile (``file://``, ``hdfs://``,
+    ``s3a://``) is found as well as a plain path.
+
+    A parquet output is read with the writer contract's schema
+    (``segment_db_id`` long, see :func:`write_output`) instead of
+    inferring it from the file footers, which would be a Spark job of
+    its own; a CSV output is read as text and cast."""
     path = spark._jvm.org.apache.hadoop.fs.Path(outfile)
     if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         return None
     if _fmt(outfile) == "csv":
         df = spark.read.option("header", True).csv(outfile)
-        return (df.select(F.col(SEGMENT_ID_COLNAME).cast("long")
-                          .alias(SEGMENT_ID_COLNAME)).distinct())
-    return spark.read.parquet(outfile).select(SEGMENT_ID_COLNAME).distinct()
+        return df.select(F.col(SEGMENT_ID_COLNAME).cast("long")
+                         .alias(SEGMENT_ID_COLNAME))
+    return spark.read.schema(f"{SEGMENT_ID_COLNAME} long").parquet(outfile)

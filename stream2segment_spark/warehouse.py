@@ -18,6 +18,7 @@ import datetime as _dt
 import os
 import threading
 import uuid
+from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -69,8 +70,15 @@ def _align_to(table: "pa.Table", schema: "pa.Schema") -> "pa.Table":
     return pa.table(cols)
 
 
+def _local(warehouse: str) -> str:
+    """A ``file:`` URI warehouse as the local path pyarrow and ``os``
+    take (Spark reads and writes the same tables under either form)."""
+    url = urlparse(warehouse)
+    return url.path if url.scheme == "file" else warehouse
+
+
 def _path(warehouse: str, name: str) -> str:
-    return os.path.join(warehouse, f"{name}.parquet")
+    return os.path.join(_local(warehouse), f"{name}.parquet")
 
 
 def read_small(warehouse: str, name: str) -> pa.Table:
@@ -84,7 +92,7 @@ def read_small(warehouse: str, name: str) -> pa.Table:
 
 
 def _write_small(warehouse: str, name: str, table: pa.Table) -> None:
-    os.makedirs(warehouse, exist_ok=True)
+    os.makedirs(_local(warehouse), exist_ok=True)
     _replace_file(warehouse, name, table)
 
 

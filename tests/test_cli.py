@@ -240,6 +240,61 @@ def test_process_library_over_cli_warehouse(warehouse, spark, tmp_path):
     assert written.segment_db_id.tolist() == got.segment_db_id.tolist()
 
 
+def test_process_pass_job_counts(warehouse, spark, tmp_path):
+    """The fixed Spark work of an 's2s process' pass, counted with the
+    status tracker. A full pass runs at most 8 jobs: the four table reads,
+    the three dim broadcasts and the write. An append pass runs at most 10:
+    it adds the broadcast of the ids the output holds and the checkpoint
+    before the write. Those ids are read with the writer contract's
+    schema (no footer job) and not deduplicated (no shuffle job)."""
+    _, cfg_path = warehouse
+    cfg = yaml.safe_load(cfg_path.read_text())
+    out = str(tmp_path / "peaks.parquet")
+    sc = spark.sparkContext
+
+    def jobs(group: str, append: bool) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            assert cli.cmd_process(spark, cfg, "tests.test_cli:seg_peak",
+                                   out, append=append) == 0
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("process-full", append=False) <= 8
+    assert jobs("process-incr", append=True) <= 10
+
+
+def test_uri_warehouse_download_twice_then_process(warehouse, tmp_path,
+                                                   capsys):
+    """A warehouse given as a ``file://`` URI is the same warehouse as its
+    path: the second download finds the first one's tables and skips
+    every unchanged segment, the execution rows land in the warehouse,
+    and 's2s process' reads the stored segments."""
+    import ast
+
+    import pandas as pd
+
+    from stream2segment_spark import warehouse as wh
+    cfg = {**_fresh_cfg(warehouse, tmp_path),
+           "warehouse": (tmp_path / "wh").as_uri(), "segments_selection": {}}
+    assert cfg["warehouse"].startswith("file:///")
+    cfg_path = tmp_path / "cfg.yaml"
+    cfg_path.write_text(yaml.safe_dump(cfg))
+    for _ in range(2):
+        assert cli.main(["download", "-c", str(cfg_path)]) == 0
+    capsys.readouterr()
+    first, _ = (r["id"] for r in wh.resolve_downloads(str(tmp_path / "wh")))
+    segs = pd.read_parquet(tmp_path / "wh" / "segments.parquet")
+    assert len(segs) == 1 and segs.download_id.tolist() == [first]
+    assert cli.main(["process", "-c", str(cfg_path),
+                     "-p", "tests.test_cli:seg_dims"]) == 0
+    rows = [ast.literal_eval(line) for line in
+            capsys.readouterr().out.splitlines() if line.startswith("{")]
+    assert [{k: r[k] for k in DIMS_ROW} for r in rows] == [DIMS_ROW]
+
+
 def transport_with_inventory(url: str, body):
     if "level=response" in url:  # station service -> XML inventory
         return b"<FDSNStationXML>GE.STA1</FDSNStationXML>", 200

@@ -5,6 +5,7 @@ tests/download/test_download.py."""
 
 from __future__ import annotations
 
+import inspect
 import threading
 import time
 from datetime import datetime, timezone
@@ -315,6 +316,41 @@ def test_concurrently_gives_each_thread_its_own_properties(spark):
         sc._jsc.clearJobGroup()
     assert got == [("a", "concurrently-props"), ("b", "concurrently-props")]
     assert sc.getLocalProperty("s2s.test.branch") is None
+
+
+def test_concurrently_names_callers_line(spark):
+    """The SQL executions of concurrent actions name the program line that
+    started them (``<thunk> at <caller file>:<line>``) in the status
+    store, not the thread pool or a JVM frame; once the section ends, an
+    action on the calling thread is named by PySpark as before."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def descriptions(after):
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return {e.executionId(): e.description() for e in
+                (execs.apply(i) for i in range(execs.size()))
+                if e.executionId() > after}
+
+    def collect_rows():
+        return spark.range(50).groupBy(F.col("id") % 3).count().collect()
+
+    def count_rows():
+        return spark.range(20).count()
+
+    before = max(descriptions(-1), default=-1)
+    line = inspect.currentframe().f_lineno + 1
+    _concurrently(spark, collect_rows, count_rows)
+    where = f"{__file__}:{line}"
+    got = descriptions(before)
+    assert set(got.values()) == {f"collect_rows at {where}",
+                                 f"count_rows at {where}"}
+    mark = max(got)
+    line = inspect.currentframe().f_lineno + 1
+    spark.range(3).collect()
+    assert list(descriptions(mark).values()) == [
+        f"collect at {__file__}:{line}"]
 
 
 def test_concurrently_raises_after_every_action_ends(spark):

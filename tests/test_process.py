@@ -143,6 +143,64 @@ def test_append_mode_uri_outfile(tmp_path, seismic_dfs, seismic_graph_full):
     assert {runs[i] for i in range(101, 151)} == {"second"}
 
 
+def _plan_graphs(spark, fn) -> list:
+    """The plan graphs (final adaptive plans) of every SQL execution that
+    ``fn()`` runs, read from Spark's SQL status store."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def ids():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return [execs.apply(i).executionId() for i in range(execs.size())]
+
+    before = max(ids(), default=-1)
+    fn()
+    return [store.planGraph(i) for i in ids() if i > before]
+
+
+def _side_of(graph, start) -> list:
+    """The nodes from ``start`` up to (not including) the first join
+    above it: the join side that ``start`` feeds."""
+    nodes = {n.id(): n for n in
+             (graph.allNodes().apply(i)
+              for i in range(graph.allNodes().size()))}
+    parent = {e.fromId(): e.toId() for e in
+              (graph.edges().apply(i) for i in range(graph.edges().size()))}
+    side, node = [], start
+    while "Join" not in node.name():
+        side.append(node)
+        node = nodes[parent[node.id()]]
+    return side
+
+
+def test_append_reads_done_ids_without_shuffle(tmp_path, spark, seismic_dfs,
+                                               seismic_graph_full):
+    """Plan-shape sentinel for append mode: the already-processed side of
+    the anti join is one schema-given column scan of the output, with no
+    aggregate and no shuffle exchange (no distinct) before the join."""
+    out = str(tmp_path / "results.parquet")
+
+    def f(seg, cfg):
+        return {"v": float(seg.id)}
+
+    process(seismic_graph_full, seismic_dfs, f, "v double",
+            segments_selection={"id": "<=100"}, outfile=out)
+    graphs = _plan_graphs(spark, lambda: process(
+        seismic_graph_full, seismic_dfs, f, "v double",
+        segments_selection={"id": "<=150"}, outfile=out, append=True))
+    scans = [(g, n) for g in graphs
+             for n in (g.allNodes().apply(i)
+                       for i in range(g.allNodes().size()))
+             if n.desc().startswith("FileScan parquet [segment_db_id#")]
+    assert len(scans) == 1
+    graph, scan = scans[0]
+    assert "ReadSchema: struct<segment_db_id:bigint>" in scan.desc()
+    side = [n.name() for n in _side_of(graph, scan)]
+    assert "HashAggregate" not in side and "Exchange" not in side, side
+    assert sorted(pd.read_parquet(out).segment_db_id) == list(range(1, 151))
+
+
 def test_csv_writer_contract(tmp_path, seismic_dfs, seismic_graph_full):
     out = str(tmp_path / "results.csv")
 

@@ -282,6 +282,37 @@ def test_merge_latest_wins_tie_is_partitioning_invariant(spark):
     assert len(winners) == 1 and winners != {"old"}
 
 
+def test_merge_latest_wins_hashes_only_incoming(spark):
+    """The tie-break hash is computed for incoming rows only: the stored
+    side is unique on the natural key, so hashing its payload (the
+    segments' data blob) decided nothing. In the optimized plan the
+    union's stored branch holds no xxhash64; the incoming one does."""
+    from stream2segment_spark.operators.upsert import merge_latest_wins
+    schema = "k long, data binary, v double"
+    ex = spark.createDataFrame([(1, b"old", 1.0), (2, b"kept", 2.0)], schema)
+    inc = spark.createDataFrame([(1, b"a", 3.0), (1, b"b", 4.0),
+                                 (3, b"new", 5.0)], schema)
+    out = merge_latest_wins(ex, inc, ["k"])
+
+    def union(node):
+        if node.nodeName() == "Union":
+            return node
+        kids = node.children()
+        for i in range(kids.size()):
+            found = union(kids.apply(i))
+            if found is not None:
+                return found
+        return None
+
+    stored, incoming = (union(out._jdf.queryExecution().optimizedPlan())
+                        .children().apply(i).toString() for i in (0, 1))
+    assert "xxhash64" not in stored
+    assert "xxhash64" in incoming
+    got = {r["k"]: bytes(r["data"]) for r in out.collect()}
+    assert got[2] == b"kept" and got[3] == b"new"
+    assert got[1] in (b"a", b"b")
+
+
 def test_update_skip_unchanged_multi_col_bounds(spark):
     """A re-download whose request bounds moved must be kept even when
     the code is unchanged (it used to be dropped, leaving stale bounds
