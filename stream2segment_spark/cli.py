@@ -1,35 +1,31 @@
-"""Command-line surface — the reference's ``s2s`` CLI (cli.py: download /
-process / show / dl stats) re-expressed over the Spark engine.
+"""Command-line surface: the reference's ``s2s`` CLI (download /
+process / show / dl stats / db / init) over the Spark engine, plus the
+beyond-reference corpus, text and table commands. ``python -m
+stream2segment_spark --help`` lists all of them.
 
 The "database" is a WAREHOUSE directory of parquet tables (events,
-stations, channels, segments) — the dburl analogue; every command reads
-and writes it with plain ``spark.read/write.parquet`` so any other Spark
+stations, channels, segments), the dburl analogue: every command reads
+and writes it with plain ``spark.read/write.parquet``, so any other Spark
 (or DuckDB) consumer can open the same tables.
 
-Commands (YAML config, reference-style key names where they map 1:1):
+How a command is declared and run:
 
-- ``download -c cfg.yaml``  — the §3.2 chain end-to-end: FDSN event +
-  channel text (files or URLs) -> parse/filter/dedup/id-sync -> spatial
-  join -> diff vs stored segments -> fetch -> miniSEED decode -> upsert;
-  prints the per-code response summary.
-- ``process -c cfg.yaml -p file.py:func -o out``  — the §3.1 pyfunc
-  engine over the warehouse with the reference's selection semantics.
-- ``show -c cfg.yaml -o report.html [-p gui.py]``  — the server-less GUI
-  analogue: decode selected segments, render the standalone HTML plot
-  report; ``-p`` loads user ``@segment_plot`` functions (the reference's
-  gui-module hook).
-- ``dl-stats -c cfg.yaml [--html]``  — the 's2s dl stats' table (code
-  columns ordered/titled per the reference policy).
-- ``init OUTDIR``  — editable template files ('s2s init',
-  reference cli.py:294).
-- ``dl-summary / dl-log / dl-config [-did N] [indices]``  — download-
-  execution inspection over the ``downloads`` bookkeeping table
-  (reference download/db/inspection/main.py; indices are run-time
-  ordered, 0=oldest, -1=latest).
-- ``db-drop -did N``  — delete executions + their segments
-  ('s2s db drop', reference download/db/management.py).
-- ``db-classlabel --add L D / --rename OLD NEW D / --delete L``  —
-  class-label CRUD ('s2s db classlabel').
+- :func:`_parser` is the command table. Each subparser declares its
+  options and names its handler with ``p.set_defaults(run=cmd_x)``.
+- A handler is ``cmd_x(args, session) -> exit code``. ``args`` is the
+  parsed namespace; the commands that take ``-c cfg.yaml`` also find the
+  loaded YAML config in ``args.cfg`` (reference-style key names where
+  they map 1:1; it must name the ``warehouse``).
+- :func:`main` parses, loads the config and calls ``args.run``. It owns
+  the Spark session: ``session()`` starts one (app name
+  ``s2s-<command>``) on its first call only, so a handler calls it after
+  its input checks, and driver-only work (``init``, ``tt-create
+  --local``, ``lsh-tune`` without ``--pairs``, ``export-db``,
+  ``db-classlabel``, sqlite ``import-db``, ``dl-log``, ``dl-config``)
+  starts no JVM at all. ``main`` stops only a session it created itself.
+- ``cmd_download``, ``cmd_process`` and ``cmd_curate`` keep typed
+  signatures, since they are also called as functions; ``_run_download``,
+  ``_run_process`` and ``_run_curate`` adapt them to the handler form.
 
 Config keys for ``download``: ``warehouse``, ``events_file``,
 ``channels_file``, ``dataselect_url``, ``min_sample_rate``,
@@ -75,6 +71,34 @@ def _load_cfg(path: str) -> dict:
     return cfg
 
 
+def _listing(spark: SparkSession, path: str, recursive: bool = False):
+    """The Hadoop ``FileStatus`` of each entry directly under ``path``
+    (of every file below it, with ``recursive``), read through the path's
+    own FileSystem, so a URI (``file://``, ``hdfs://``, ``s3a://``) lists
+    like a plain path. Empty when nothing is there."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return []
+    if not recursive:
+        return list(fs.listStatus(root))
+    files, it = [], fs.listFiles(root, True)
+    while it.hasNext():
+        files.append(it.next())
+    return files
+
+
+def _missing_columns(df: DataFrame, path: str, cols) -> bool:
+    """Whether ``df`` (read from ``path``) lacks any of ``cols`` (``None``
+    entries are skipped); if so, says which on stderr."""
+    missing = [c for c in dict.fromkeys(cols)
+               if c is not None and c not in df.columns]
+    if missing:
+        print(f"error: {path} lacks column(s) {missing} "
+              f"(has: {sorted(df.columns)})", file=sys.stderr)
+    return bool(missing)
+
+
 def _tables(spark: SparkSession, cfg: dict, names) -> dict[str, DataFrame]:
     """The stored warehouse tables ``names``, by name.
 
@@ -92,10 +116,8 @@ def _tables(spark: SparkSession, cfg: dict, names) -> dict[str, DataFrame]:
     LocalRelation), so the joins, unions and aggregates of a first
     download against it fold away instead of running stages."""
     from stream2segment_spark.pipeline import _concurrently
-    root = spark._jvm.org.apache.hadoop.fs.Path(cfg["warehouse"])
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    stored = ({st.getPath().getName() for st in fs.listStatus(root)}
-              if fs.exists(root) else set())
+    stored = {st.getPath().getName()
+              for st in _listing(spark, cfg["warehouse"])}
 
     def read_table(name: str) -> DataFrame:
         if f"{name}.parquet" in stored:
@@ -255,6 +277,11 @@ def cmd_download(spark: SparkSession, cfg: dict, cfg_text: str = "") -> int:
     return 0
 
 
+def _run_download(args, session) -> int:
+    with open(args.config, encoding="utf-8") as fh:
+        return cmd_download(session(), args.cfg, fh.read())
+
+
 def _warehouse_graph(dfs):
     """Join graph over the STORED warehouse tables, with every reference
     hybrid property attached so selection strings accept derived
@@ -335,6 +362,11 @@ def cmd_process(spark: SparkSession, cfg: dict, pyfunc_spec: str,
     return 0
 
 
+def _run_process(args, session) -> int:
+    return cmd_process(session(), args.cfg, args.pyfunc, args.outfile,
+                       args.append)
+
+
 def _decoded_selection(spark: SparkSession, cfg: dict,
                        plot_module: str | None):
     """Shared by cmd_show / cmd_show_serve: apply the config's segment
@@ -381,19 +413,24 @@ def _decoded_selection(spark: SparkSession, cfg: dict,
     return decoded, plots_kwargs
 
 
-def cmd_show(spark: SparkSession, cfg: dict, outfile: str,
-             max_segments: int, plot_module: str | None = None) -> int:
+def cmd_show(args, session) -> int:
     from stream2segment_spark.report import write_segment_report
 
-    decoded, plots_kwargs = _decoded_selection(spark, cfg, plot_module)
+    if args.serve:
+        return cmd_show_serve(session(), args.cfg, args.port,
+                              args.plot_module, args.annotator)
+    if not args.outfile:
+        raise SystemExit("show: -o/--outfile is required (or pass --serve)")
+    decoded, plots_kwargs = _decoded_selection(session(), args.cfg,
+                                               args.plot_module)
     # the static report always renders the raw view; preprocess is a
     # per-request toggle of the interactive server only
     report_kwargs = {k: v for k, v in plots_kwargs.items()
                      if k in ("extra_producers", "plots")}
-    n = write_segment_report(decoded, outfile, title=cfg.get(
-        "title", "segment report"), max_segments=max_segments,
+    n = write_segment_report(decoded, args.outfile, title=args.cfg.get(
+        "title", "segment report"), max_segments=args.max_segments,
         label_cols=("seed_id",), **report_kwargs)
-    print(f"wrote {n} segment(s) to {outfile}")
+    print(f"wrote {n} segment(s) to {args.outfile}")
     return 0
 
 
@@ -425,10 +462,11 @@ def cmd_show_serve(spark: SparkSession, cfg: dict, port: int,
     return 0
 
 
-def cmd_dl_stats(spark: SparkSession, cfg: dict, as_html: bool) -> int:
+def cmd_dl_stats(args, session) -> int:
     from stream2segment_spark.reporting import (
         render_html, render_text, stats_by_code)
-    segs = _table(spark, cfg, "segments")
+    cfg = args.cfg
+    segs = _table(session(), cfg, "segments")
     if "datacenter" not in segs.columns:  # single-datacenter warehouse
         segs = segs.withColumn(
             "datacenter", F.lit(cfg.get("dataselect_url", "all")))
@@ -436,16 +474,17 @@ def cmd_dl_stats(spark: SparkSession, cfg: dict, as_html: bool) -> int:
         segs = segs.withColumn(
             "datacenter", F.coalesce("datacenter", F.lit("unknown")))
     stats = stats_by_code(segs)
-    print(render_html(stats) if as_html else render_text(stats))
+    print(render_html(stats) if args.html else render_text(stats))
     return 0
 
 
-def cmd_dl_summary(spark: SparkSession, cfg: dict, dids, indices) -> int:
+def cmd_dl_summary(args, session) -> int:
     """'s2s dl summary': one line per download execution — id, run time,
     segment count and OK count (download/db/inspection/main.py summary)."""
     from stream2segment_spark import warehouse as wh
-    rows = wh.resolve_downloads(cfg["warehouse"], dids, indices)
-    segs = _table(spark, cfg, "segments")
+    rows = wh.resolve_downloads(args.cfg["warehouse"], args.download_id,
+                                args.indices)
+    segs = _table(session(), args.cfg, "segments")
     per: dict[int, tuple[int, int]] = {}
     if "download_id" in segs.columns:
         per = {r["download_id"]: (r["n"], r["ok"]) for r in
@@ -461,25 +500,27 @@ def cmd_dl_summary(spark: SparkSession, cfg: dict, dids, indices) -> int:
     return 0
 
 
-def cmd_dl_text(cfg: dict, dids, indices, field: str) -> int:
+def cmd_dl_text(args, session) -> int:
     """'s2s dl log' / 's2s dl config': print the stored log / YAML config
     of the selected execution(s) (default: the latest, index -1)."""
     from stream2segment_spark import warehouse as wh
+    dids, indices = args.download_id, args.indices
     if not dids and not indices:
         indices = [-1]
-    rows = wh.resolve_downloads(cfg["warehouse"], dids, indices)
+    rows = wh.resolve_downloads(args.cfg["warehouse"], dids, indices)
     for r in rows:
         if len(rows) > 1:
             print(f"--- download id={r['id']} run_time={r['run_time']} ---")
-        print(r[field] or "")
+        print(r[args.cmd.removeprefix("dl-")] or "")
     return 0
 
 
-def cmd_db_drop(spark: SparkSession, cfg: dict, dids) -> int:
+def cmd_db_drop(args, session) -> int:
     """'s2s db drop': delete download executions and their segments."""
     from stream2segment_spark import warehouse as wh
     try:
-        counts = wh.drop_downloads(spark, cfg["warehouse"], list(dids))
+        counts = wh.drop_downloads(session(), args.cfg["warehouse"],
+                                   list(args.download_id))
     except KeyError as exc:
         print(str(exc))
         return 1
@@ -488,15 +529,15 @@ def cmd_db_drop(spark: SparkSession, cfg: dict, dids) -> int:
     return 0
 
 
-def cmd_db_classlabel(cfg: dict, add, rename, delete) -> int:
+def cmd_db_classlabel(args, session) -> int:
     """'s2s db classlabel': add/rename/delete class labels."""
     from stream2segment_spark import warehouse as wh
     try:
         labels = wh.classlabels(
-            cfg["warehouse"],
-            add={a[0]: a[1] for a in (add or ())},
-            rename={r[0]: (r[1], r[2] or None) for r in (rename or ())},
-            delete=list(delete or ()))
+            args.cfg["warehouse"],
+            add={a[0]: a[1] for a in (args.add or ())},
+            rename={r[0]: (r[1], r[2] or None) for r in (args.rename or ())},
+            delete=list(args.delete or ()))
     except KeyError as exc:
         print(str(exc))
         return 1
@@ -508,12 +549,16 @@ def cmd_db_classlabel(cfg: dict, add, rename, delete) -> int:
     return 0
 
 
-def cmd_import_db(spark, cfg: dict, dburl: str) -> int:
+def cmd_import_db(args, session) -> int:
     """'s2s import-db': one-shot migration of a reference SQLite/Postgres
     database into the parquet warehouse (sources/dbimport.py)."""
     from stream2segment_spark.sources.dbimport import import_db
 
-    counts = import_db(spark, dburl, cfg["warehouse"])
+    cfg, dburl = args.cfg, args.dburl
+    # sqlite is a local single-file read: no Spark session needed
+    sqlite = "://" not in dburl or dburl.startswith("sqlite://")
+    counts = import_db(None if sqlite else session(), dburl,
+                       cfg["warehouse"])
     if not counts:
         print(f"no stream2segment tables found in {dburl}")
         return 1
@@ -523,17 +568,18 @@ def cmd_import_db(spark, cfg: dict, dburl: str) -> int:
     return 0
 
 
-def cmd_export_db(cfg: dict, outfile: str) -> int:
+def cmd_export_db(args, session) -> int:
     """'s2s export-db': write the parquet warehouse to a reference-layout
     SQLite database (sinks/dbexport.py) — e.g. to browse Spark-processed
     data in the reference's GUI."""
     from stream2segment_spark.sinks.dbexport import export_sqlite
 
-    counts = export_sqlite(cfg["warehouse"], outfile)
+    warehouse = args.cfg["warehouse"]
+    counts = export_sqlite(warehouse, args.outfile)
     if not counts:
-        print(f"no warehouse tables found in {cfg['warehouse']}")
+        print(f"no warehouse tables found in {warehouse}")
         return 1
-    print(f"exported to '{outfile}':")
+    print(f"exported to '{args.outfile}':")
     for name, n in counts.items():
         print(f"  {name}: {n} row(s)")
     return 0
@@ -575,24 +621,26 @@ config: {}                      # dict passed through to the pyfunc
 """
 
 
-def cmd_tt_create(spark, model_spec: str, outfile: str, phase: str,
-                  tol: float, maxdepth: float, maxdist: float) -> int:
+def cmd_tt_create(args, session) -> int:
     """'s2s tt-create': build a travel-time npz table from a 1-D velocity
     model (reference ttcreator.py:419-572, obspy-free — grid rows are a
-    distributed Spark job; see traveltimes.py for the ray theory)."""
+    distributed Spark job, or computed on the driver with ``--local``;
+    see traveltimes.py for the ray theory)."""
     from stream2segment_spark.traveltimes import (
         VelocityModel1D, compute_grid, demo_model, save_npz)
 
-    if model_spec == "demo":
+    phase, tol = args.phase, args.tolerance
+    if args.model == "demo":
         model = demo_model()
     else:
         model = VelocityModel1D.from_csv(
-            model_spec, column="vs" if phase.upper() == "S" else "vp")
+            args.model, column="vs" if phase.upper() == "S" else "vp")
     depths, dists, grid = compute_grid(
-        model, tt_errtol=tol, max_source_depth_km=maxdepth,
-        max_dist_deg=maxdist, spark=spark)
-    save_npz(outfile, depths, dists, grid, model.name, phase.upper(), tol)
-    print(f"wrote {outfile}: {grid.shape[0]} source depths x "
+        model, tt_errtol=tol, max_source_depth_km=args.maxdepth,
+        max_dist_deg=args.maxdist, spark=None if args.local else session())
+    save_npz(args.outfile, depths, dists, grid, model.name, phase.upper(),
+             tol)
+    print(f"wrote {args.outfile}: {grid.shape[0]} source depths x "
           f"{grid.shape[1]} distances (model={model.name}, phase={phase}, "
           f"tol={tol}s)")
     return 0
@@ -639,13 +687,9 @@ def cmd_curate(spark, infile: str, outdir: str, languages: str,
         return STOPWORDS_BY_LANG
 
     docs = spark.read.parquet(infile)
-    need = {"doc_id", "text"} | ({mix_col} if mix_col else set()) \
-        | ({domain_col} if domain_cap is not None else set())
-    missing = need - set(docs.columns)
-    if missing:
-        print(f"error: {infile} lacks required column(s) "
-              f"{sorted(missing)} (has: {sorted(docs.columns)})",
-              file=sys.stderr)
+    if _missing_columns(docs, infile, (
+            "doc_id", "text", mix_col or None,
+            domain_col if domain_cap is not None else None)):
         return 2
     # signature chaining (incremental curation at scale): the persisted
     # MinHash table lets every later --against batch skip re-tokenizing
@@ -672,11 +716,8 @@ def cmd_curate(spark, infile: str, outdir: str, languages: str,
     against_sig_df = None
     if against_signatures is not None:
         against_sig_df = spark.read.parquet(against_signatures)
-        sig_missing = {"doc_id", "minhash"} - set(against_sig_df.columns)
-        if sig_missing:
-            print(f"error: {against_signatures} lacks required "
-                  f"column(s) {sorted(sig_missing)} (has: "
-                  f"{sorted(against_sig_df.columns)})", file=sys.stderr)
+        if _missing_columns(against_sig_df, against_signatures,
+                            ("doc_id", "minhash")):
             return 2
     if (dsir_target is None) != (dsir_k is None):
         print("error: --dsir-target and --dsir-k go together",
@@ -689,11 +730,7 @@ def cmd_curate(spark, infile: str, outdir: str, languages: str,
     dsir_df = None
     if dsir_target is not None:
         dsir_df = spark.read.parquet(dsir_target)
-        d_missing = {"doc_id", "text"} - set(dsir_df.columns)
-        if d_missing:
-            print(f"error: {dsir_target} lacks required column(s) "
-                  f"{sorted(d_missing)} (has: {sorted(dsir_df.columns)})",
-                  file=sys.stderr)
+        if _missing_columns(dsir_df, dsir_target, ("doc_id", "text")):
             return 2
     sig_frames: list = []
     persists: list = []
@@ -780,61 +817,75 @@ def cmd_curate(spark, infile: str, outdir: str, languages: str,
     return 0
 
 
-def cmd_export_jsonl(spark, infile: str, outdir: str,
-                     columns: str | None, shards: int | None,
-                     gzip: bool) -> int:
+def _run_curate(args, session) -> int:
+    return cmd_curate(
+        session(), args.infile, args.outdir, args.languages,
+        args.min_quality, args.min_tokens, args.max_tokens,
+        args.neardup_threshold, args.neardup_mode, args.line_max_df,
+        args.max_dup_frac, args.cut_dup_substrings, args.mix_col,
+        args.mix_alpha, args.pack_budget, args.pack_shards,
+        args.semantic_k, args.min_lm_score, args.c4,
+        "multilang" if args.gopher_multilang else args.gopher,
+        args.gopher_repetition, args.benchmark, args.max_contam_frac,
+        neardup_keep=args.neardup_keep, domain_cap=args.domain_cap,
+        domain_col=args.domain_col, tokenizer=args.tokenizer,
+        langid_mode=args.langid_mode,
+        multilingual_stopwords=args.multilingual_stopwords,
+        against=args.against, against_signatures=args.against_signatures,
+        write_signatures=args.write_signatures,
+        html_extract=args.html_extract, nfc_normalize=args.nfc_normalize,
+        classifier=args.classifier,
+        min_classifier_score=args.min_classifier_score,
+        pack_bestfit=args.pack_bestfit, dsir_target=args.dsir_target,
+        dsir_k=args.dsir_k, audit=args.audit)
+
+
+def cmd_export_jsonl(args, session) -> int:
     """'s2s export-jsonl': parquet -> JSON-lines shards. Pure sink: the
     write is distributed (one shard per partition; --shards pays one
     round-robin repartition for an exact count), so at 100 TB this is a
     map-only format conversion."""
-    df = spark.read.parquet(infile)
-    if columns:
-        cols = [c for c in columns.split(",") if c]
-        missing = set(cols) - set(df.columns)
-        if missing:
-            print(f"error: {infile} lacks column(s) {sorted(missing)} "
-                  f"(has: {sorted(df.columns)})", file=sys.stderr)
+    df = session().read.parquet(args.infile)
+    if args.columns:
+        cols = [c for c in args.columns.split(",") if c]
+        if _missing_columns(df, args.infile, cols):
             return 2
         df = df.select(*cols)
-    if shards is not None:
-        if shards <= 0:
+    if args.shards is not None:
+        if args.shards <= 0:
             print("error: --shards must be positive", file=sys.stderr)
             return 2
-        df = df.repartition(shards)
+        df = df.repartition(args.shards)
     w = df.write.mode("overwrite")
-    if gzip:
+    if args.gzip:
         w = w.option("compression", "gzip")
-    w.json(outdir)
+    w.json(args.outdir)
     return 0
 
 
-def cmd_corr(spark, infile: str, cols: str, scale: int,
-             group_by: str | None, method: str = "long") -> int:
+def cmd_corr(args, session) -> int:
     """'s2s corr': exact single-pass correlation matrix
     (operators/stats.corr_matrix_exact) of the given numeric columns,
     optionally per group; one JSON line per pair on stdout."""
     import json as _json
 
     from stream2segment_spark.operators.stats import corr_matrix_exact
-    df = spark.read.parquet(infile)
-    names = [c for c in cols.split(",") if c]
-    gcols = [c for c in (group_by or "").split(",") if c]
+    df = session().read.parquet(args.infile)
+    names = [c for c in args.cols.split(",") if c]
+    gcols = [c for c in (args.group_by or "").split(",") if c]
     missing = [c for c in names + gcols if c not in df.columns]
     if missing or len(names) < 2:
         print(f"error: need >= 2 existing columns; missing={missing}",
               file=sys.stderr)
         return 2
-    out = corr_matrix_exact(df, {c: scale for c in names}, gcols,
-                            method=method)
+    out = corr_matrix_exact(df, {c: args.scale for c in names}, gcols,
+                            method=args.method)
     for r in out.collect():
         print(_json.dumps(r.asDict(), default=str))
     return 0
 
 
-def cmd_lsh_tune(threshold: float, n_perm: int, banded: bool,
-                 fp_weight: float, fn_weight: float,
-                 pairs: str | None = None,
-                 jaccard_col: str = "jaccard", spark=None) -> int:
+def cmd_lsh_tune(args, session) -> int:
     """'s2s lsh-tune': the MinHash-LSH design decision as a command —
     one JSON line with the chosen (bands, rows) and its S-curve FP/FN
     mass (pure driver-side math), then, with ``--pairs``, one line per
@@ -845,11 +896,10 @@ def cmd_lsh_tune(threshold: float, n_perm: int, banded: bool,
 
     from stream2segment_spark.operators.lsh_tuning import (
         lsh_error_rates, lsh_plan, lsh_plan_banded, lsh_tuning_curve)
+    threshold, jaccard_col = args.threshold, args.jaccard_col
+    plan = lsh_plan_banded if args.banded else lsh_plan
     try:
-        if banded:
-            b, r = lsh_plan_banded(threshold, n_perm, fp_weight, fn_weight)
-        else:
-            b, r = lsh_plan(threshold, n_perm, fp_weight, fn_weight)
+        b, r = plan(threshold, args.n_perm, args.fp_weight, args.fn_weight)
     except ValueError as exc:
         print(f"error: {exc}", file=sys.stderr)
         return 2
@@ -858,10 +908,10 @@ def cmd_lsh_tune(threshold: float, n_perm: int, banded: bool,
         "bands": b, "rows_per_band": r,
         "p_at_threshold": round(1.0 - (1.0 - threshold ** r) ** b, 6),
         "fp_mass": round(fp, 6), "fn_mass": round(fn, 6)}))
-    if pairs is not None:
-        df = spark.read.parquet(pairs)
+    if args.pairs is not None:  # without it: driver-side math, no session
+        df = session().read.parquet(args.pairs)
         if jaccard_col not in df.columns:
-            print(f"error: column {jaccard_col!r} not in {pairs}",
+            print(f"error: column {jaccard_col!r} not in {args.pairs}",
                   file=sys.stderr)
             return 2
         curve = lsh_tuning_curve(df, jaccard_col, b=b, r=r)
@@ -870,8 +920,7 @@ def cmd_lsh_tune(threshold: float, n_perm: int, banded: bool,
     return 0
 
 
-def cmd_media_probe(spark, infile: str, content_col: str,
-                    id_col: str, outfile: str | None, limit: int) -> int:
+def cmd_media_probe(args, session) -> int:
     """'s2s media-probe': parse image/audio/video container headers of
     a binary column (multimodal.probe_media_udf + probe_video_udf —
     scan-stage Arrow UDFs, no codecs); writes parquet or prints JSON
@@ -880,13 +929,11 @@ def cmd_media_probe(spark, infile: str, content_col: str,
     import json as _json
 
     from stream2segment_spark import multimodal as MM
-    df = spark.read.parquet(infile)
-    missing = [c for c in (content_col, id_col) if c not in df.columns]
-    if missing:
-        print(f"error: {infile} lacks column(s) {missing}",
-              file=sys.stderr)
+    id_col = args.id_col
+    df = session().read.parquet(args.infile)
+    if _missing_columns(df, args.infile, (args.content_col, id_col)):
         return 2
-    blob = F.col(content_col)
+    blob = F.col(args.content_col)
     out = df.select(
         F.col(id_col),
         MM.probe_media_udf()(blob).alias("media"),
@@ -902,16 +949,16 @@ def cmd_media_probe(spark, infile: str, content_col: str,
         F.when(F.col("media.media_type").isNotNull()
                | F.col("video.media_type").isNotNull(), F.lit(None))
          .otherwise(F.col("media.error")).alias("error"))
-    if outfile:
-        out.write.mode("overwrite").parquet(outfile)
-        print(_json.dumps({"written": outfile}))
+    if args.outfile:
+        out.write.mode("overwrite").parquet(args.outfile)
+        print(_json.dumps({"written": args.outfile}))
         return 0
-    for r in out.limit(limit).collect():
+    for r in out.limit(args.limit).collect():
         print(_json.dumps(r.asDict(), default=str))
     return 0
 
 
-def cmd_validate(spark, infile: str, rules_path: str) -> int:
+def cmd_validate(args, session) -> int:
     """'s2s validate': assert a JSON rule contract over a parquet table
     (operators/validate.validate_table, one aggregation pass); prints
     one JSON line per rule and exits 1 if any rule failed (the CI
@@ -919,9 +966,9 @@ def cmd_validate(spark, infile: str, rules_path: str) -> int:
     import json as _json
 
     from stream2segment_spark.operators.validate import validate_table
-    with open(rules_path) as fh:
+    with open(args.rules) as fh:
         rules = _json.load(fh)
-    df = spark.read.parquet(infile)
+    df = session().read.parquet(args.infile)
     try:
         report = validate_table(df, rules).collect()
     except ValueError as exc:
@@ -932,9 +979,7 @@ def cmd_validate(spark, infile: str, rules_path: str) -> int:
     return 0 if all(r["ok"] for r in report) else 1
 
 
-def cmd_hist(spark, infile: str, col: str, bins: int, quantiles: str,
-             lo: float | None, hi: float | None,
-             group_by: str | None) -> int:
+def cmd_hist(args, session) -> int:
     """'s2s hist': equi-width histogram sketch + quantile estimates of a
     numeric column (operators/sketch.hist_sketch |> hist_quantiles).
     Range comes from --lo/--hi or one min/max pre-pass (two scans
@@ -944,12 +989,11 @@ def cmd_hist(spark, infile: str, col: str, bins: int, quantiles: str,
 
     from stream2segment_spark.operators.sketch import (
         hist_quantiles, hist_sketch)
-    df = spark.read.parquet(infile)
-    gcols = [c for c in (group_by or "").split(",") if c]
-    missing = [c for c in [col] + gcols if c not in df.columns]
-    if missing:
-        print(f"error: {infile} lacks column(s) {missing}",
-              file=sys.stderr)
+    col, bins, quantiles = args.col, args.bins, args.quantiles
+    lo, hi = args.lo, args.hi
+    df = session().read.parquet(args.infile)
+    gcols = [c for c in (args.group_by or "").split(",") if c]
+    if _missing_columns(df, args.infile, [col] + gcols):
         return 2
     try:
         qs = tuple(float(q) for q in quantiles.split(",") if q)
@@ -972,16 +1016,16 @@ def cmd_hist(spark, infile: str, col: str, bins: int, quantiles: str,
     return 0
 
 
-def cmd_ingest_wet(spark, inpath: str, outfile: str,
-                   keep_bad: bool) -> int:
+def cmd_ingest_wet(args, session) -> int:
     """'s2s ingest-wet': WARC/WET archive(s) -> documents parquet
     (doc_id = first 15 md5 hex digits of the URI as BIGINT — stable
     across re-crawls; text, uri, fetch timestamp, byte length). Records
     failing the Content-Length cross-check are dropped unless
     --keep-bad. Scan-stage parse (sources/wet.py), one map-only job."""
     from stream2segment_spark.sources.wet import read_wet
-    docs = read_wet(spark, inpath)
-    if not keep_bad:
+    spark, outfile = session(), args.outfile
+    docs = read_wet(spark, args.inpath)
+    if not args.keep_bad:
         docs = docs.where(F.col("len_ok"))
     out = docs.select(
         F.conv(F.substring(F.md5("uri"), 1, 15), 16, 10).cast("long")
@@ -995,11 +1039,7 @@ def cmd_ingest_wet(spark, inpath: str, outfile: str,
     return 0
 
 
-def cmd_classify(spark, infile: str, outfile: str, id_col: str,
-                 label_col: str, vec_col: str | None, text_col: str | None,
-                 iters: int, lr: float,
-                 weights_out: str | None = None,
-                 tokenizer: str = "ascii") -> int:
+def cmd_classify(args, session) -> int:
     """'s2s classify': train operators/classifier.train_linear_classifier
     on a labeled parquet (vector features, or hash-n-gram embeddings of
     a text column) and write (id, label, score, pred) parquet plus one
@@ -1014,16 +1054,16 @@ def cmd_classify(spark, infile: str, outfile: str, id_col: str,
     from stream2segment_spark.operators.classifier import (
         save_classifier, train_linear_classifier)
 
+    id_col, label_col, weights_out = (args.id_col, args.label_col,
+                                      args.weights_out)
+    vec_col, text_col, tokenizer = args.vec_col, args.text_col, args.tokenizer
     if (vec_col is None) == (text_col is None):
         print("error: pass exactly one of --vec-col / --text-col",
               file=sys.stderr)
         return 2
-    df = spark.read.parquet(infile)
-    need = {id_col, label_col, vec_col or text_col}
-    missing = need - set(df.columns)
-    if missing:
-        print(f"error: {infile} lacks column(s) {sorted(missing)} "
-              f"(has: {sorted(df.columns)})", file=sys.stderr)
+    df = session().read.parquet(args.infile)
+    if _missing_columns(df, args.infile,
+                        (id_col, label_col, vec_col or text_col)):
         return 2
     if weights_out is not None:
         out_dir = os.path.dirname(weights_out) or "."
@@ -1047,10 +1087,10 @@ def cmd_classify(spark, infile: str, outfile: str, id_col: str,
         feat_meta = {"features": "hashed_ngram", **recipe,
                      "tokenizer": tokenizer}
     scored, weights = train_linear_classifier(
-        df, id_col, vec_col, label_col, iters=iters, lr=lr)
+        df, id_col, vec_col, label_col, iters=args.iters, lr=args.lr)
     scored = scored.persist()
     try:
-        scored.write.mode("overwrite").parquet(outfile)
+        scored.write.mode("overwrite").parquet(args.outfile)
         acc = scored.select(F.avg(
             (F.col("pred") == F.col(label_col)).cast("double"))
             .alias("a")).collect()[0]["a"]
@@ -1071,10 +1111,7 @@ def cmd_classify(spark, infile: str, outfile: str, id_col: str,
     return 0
 
 
-def cmd_dsir_select(spark, infile: str, target: str, outfile: str,
-                    id_col: str, text_col: str, k: int, buckets: int,
-                    mode: str, method: str, temperature: float,
-                    tokenizer: str = "ascii") -> int:
+def cmd_dsir_select(args, session) -> int:
     """'s2s dsir-select': DSIR importance resampling (functions/dsir.py
     — Xie et al. 2023). Scores every document of the raw parquet
     against the hashed-n-gram profile of the TARGET parquet and writes
@@ -1086,24 +1123,22 @@ def cmd_dsir_select(spark, infile: str, target: str, outfile: str,
 
     from stream2segment_spark.functions.dsir import dsir_pipeline
 
-    raw = spark.read.parquet(infile)
-    tgt = spark.read.parquet(target)
-    for name, df in (("raw", raw), ("target", tgt)):
-        missing = {id_col, text_col} - set(df.columns)
-        if missing:
-            print(f"error: {name} parquet lacks column(s) "
-                  f"{sorted(missing)} (has: {sorted(df.columns)})",
-                  file=sys.stderr)
+    spark, outfile = session(), args.outfile
+    k, mode, method = args.k, args.mode, args.method
+    raw = spark.read.parquet(args.infile)
+    tgt = spark.read.parquet(args.target)
+    for path, df in ((args.infile, raw), (args.target, tgt)):
+        if _missing_columns(df, path, (args.id_col, args.text_col)):
             return 2
     # receive the pipeline's cached frames and release them once the
     # write has materialized (ADVICE r9: without this a long-lived
     # session leaks the persisted feature/count frames) — the same
     # pattern as cmd_curate's persists handling
     persists: list = []
-    out = dsir_pipeline(raw, tgt, id_col, text_col, k, buckets=buckets,
-                        mode=mode, method=method,
-                        temperature=temperature, tokenizer=tokenizer,
-                        persists=persists)
+    out = dsir_pipeline(raw, tgt, args.id_col, args.text_col, k,
+                        buckets=args.buckets, mode=mode, method=method,
+                        temperature=args.temperature,
+                        tokenizer=args.tokenizer, persists=persists)
     try:
         out.write.mode("overwrite").parquet(outfile)
     finally:
@@ -1111,14 +1146,435 @@ def cmd_dsir_select(spark, infile: str, target: str, outfile: str,
             frame.unpersist()
     n = spark.read.parquet(outfile).count()
     print(json.dumps({"selected": n, "k": k, "mode": mode,
-                      "method": method, "buckets": buckets}))
+                      "method": method, "buckets": args.buckets}))
     return 0
 
 
-def cmd_init(outdir: str) -> int:
+def cmd_search(args, session) -> int:
+    """'s2s search': BM25-style keyword search over a corpus parquet, or
+    over an inverted index built by ``--build-index`` (operators/search);
+    one JSON line per (term, hit)."""
+    import json
+
+    from stream2segment_spark.operators.search import (
+        build_search_index, index_search_topk, search_topk)
+    terms = args.query.split()
+    if not terms and not args.build_index:
+        print("search: empty query", file=sys.stderr)
+        return 2
+    if not args.infile and not args.index:
+        print("search: need -i corpus or --index DIR", file=sys.stderr)
+        return 2
+    if args.build_index:
+        if not args.infile:
+            print("search: --build-index needs -i corpus", file=sys.stderr)
+            return 2
+        docs = session().read.parquet(args.infile)
+        build_search_index(docs, args.id_col, args.text_col,
+                           args.build_index, tokenizer=args.tokenizer)
+        print(json.dumps({"index": args.build_index,
+                          "tokenizer": args.tokenizer}))
+        return 0
+    if args.index:
+        rows = index_search_topk(session(), args.index, terms,
+                                 k=args.topk).collect()
+        id_field = "id"
+    else:
+        docs = session().read.parquet(args.infile)
+        if _missing_columns(docs, args.infile, (args.id_col, args.text_col)):
+            return 2
+        rows = search_topk(docs, args.id_col, args.text_col, terms,
+                           k=args.topk, tokenizer=args.tokenizer).collect()
+        id_field = args.id_col
+    for r in rows:
+        print(json.dumps({
+            "term": r["term"], args.id_col: r[id_field], "rank": r["rank"],
+            "tf": r["tf"], "dl": r["dl"], "score": round(r["score"], 6)}))
+    return 0
+
+
+def cmd_bpe_train(args, session) -> int:
+    """'s2s bpe-train': train a BPE merge table over a corpus parquet
+    (functions/bpe) and write it as JSON lines, in training order."""
+    import json
+
+    from stream2segment_spark.functions.bpe import (
+        bpe_train, bpe_train_batched, bpe_train_collected)
+    if args.merges <= 0:
+        print(f"error: --merges must be positive, got {args.merges}",
+              file=sys.stderr)
+        return 2
+    if args.batch > 1 and args.collect_vocab:
+        print("error: --collect-vocab trains in canonical order; "
+              "it is incompatible with --batch > 1", file=sys.stderr)
+        return 2
+    docs = session().read.parquet(args.infile)
+    if _missing_columns(docs, args.infile, (args.text_col,)):
+        return 2
+    if args.batch > 1:
+        merges, words = bpe_train_batched(
+            docs, args.text_col, args.merges, batch=args.batch)
+    elif args.collect_vocab:
+        merges, words = bpe_train_collected(
+            docs, args.text_col, args.merges, max_words=args.max_words)
+    else:
+        merges, words = bpe_train(docs, args.text_col, args.merges)
+    n_words, n_syms = words.select(
+        F.count("*"), F.sum(F.size("syms"))).collect()[0]
+    words.unpersist()
+    with open(args.outfile, "w", encoding="utf-8") as fh:
+        for left, right, cnt in merges:
+            fh.write(json.dumps({"left": left, "right": right,
+                                 "count": cnt}) + "\n")
+    print(f"trained {len(merges)} merge(s); vocabulary "
+          f"{n_words} word(s), {n_syms or 0} symbol occurrence(s)")
+    return 0
+
+
+def cmd_isf_phases(args, session) -> int:
+    """'s2s isf-phases': the phase sub-blocks of an ISF bulletin
+    (sources/isf) as a phases parquet."""
+    from stream2segment_spark.sources.isf import isf_phases_df
+    try:
+        with open(args.infile, encoding="utf-8", errors="replace") as fh:
+            text = fh.read()
+    except OSError as exc:
+        print(f"error: cannot read {args.infile!r}: {exc}", file=sys.stderr)
+        return 2
+    spark = session()
+    isf_phases_df(spark, text).write.mode("overwrite").parquet(args.outfile)
+    n = spark.read.parquet(args.outfile).count()
+    print(f"extracted {n} phase pick(s) -> {args.outfile}")
+    return 0
+
+
+def cmd_lm_train(args, session) -> int:
+    """'s2s lm-train': train a bigram (or stupid-backoff trigram) LM over
+    a corpus parquet (functions/lm) and save it as a model directory."""
+    from stream2segment_spark.functions.lm import (
+        bigram_model, save_bigram_model, save_trigram_model, trigram_model)
+    docs = session().read.parquet(args.infile)
+    if _missing_columns(docs, args.infile, (args.text_col,)):
+        return 2
+    if args.order == 3:
+        model = trigram_model(docs, args.text_col, tokenizer=args.tokenizer)
+        save_trigram_model(model, args.outdir, tokenizer=args.tokenizer)
+        vocab = model[3]
+    else:
+        model = bigram_model(docs, args.text_col, tokenizer=args.tokenizer)
+        save_bigram_model(model, args.outdir, tokenizer=args.tokenizer)
+        vocab = model[2]
+    n_bi = model[1].count()
+    print(f"trained order-{args.order} LM: vocabulary {vocab} "
+          f"word(s), {n_bi} bigram(s) -> {args.outdir}")
+    return 0
+
+
+def cmd_lm_score(args, session) -> int:
+    """'s2s lm-score': score every document of a corpus parquet with a
+    saved LM, or a self-trained one without ``--model`` (functions/lm),
+    and write id + n_trans + score parquet."""
+    from stream2segment_spark.functions.lm import (
+        lm_model_tokenizer, lm_transition_scores, load_lm_model,
+        stupid_backoff_scores)
+    spark = session()
+    docs = spark.read.parquet(args.infile)
+    if _missing_columns(docs, args.infile, (args.id_col, args.text_col)):
+        return 2
+    kind = "trigram" if args.order == 3 else "bigram"
+    model = None
+    tokenizer = args.tokenizer
+    if args.model is not None:
+        try:
+            kind, model = load_lm_model(spark, args.model)
+            # the model's recorded mode wins: scoring with a different
+            # tokenizer than training makes every token OOV relative to
+            # the counts (lm.py:277)
+            tokenizer = lm_model_tokenizer(args.model)
+        except (OSError, ValueError, KeyError) as exc:
+            print(f"error: cannot load model {args.model!r}: {exc}",
+                  file=sys.stderr)
+            return 2
+    persists: list = []
+    if kind == "trigram":
+        out = stupid_backoff_scores(docs, args.id_col, args.text_col,
+                                    model=model, persists=persists,
+                                    tokenizer=tokenizer)
+        score_col = "sb_score"
+    else:
+        out = lm_transition_scores(docs, args.id_col, args.text_col,
+                                   model=model, tokenizer=tokenizer)
+        score_col = "lm_score"
+    try:
+        out.write.mode("overwrite").parquet(args.outfile)
+    finally:
+        for frame in persists:
+            frame.unpersist()
+    n, mean = spark.read.parquet(args.outfile).select(
+        F.count("*"), F.avg(score_col)).collect()[0]
+    print(f"scored {n} document(s); mean {score_col} "
+          f"{0.0 if mean is None else mean:.6f}")
+    return 0
+
+
+def cmd_compact(args, session) -> int:
+    """'s2s compact': rewrite a parquet table into files of about
+    ``--target-mb`` each; prints the input bytes and output file count
+    as one JSON line."""
+    import json
+
+    spark = session()
+    total = sum(st.getLen()
+                for st in _listing(spark, args.infile, recursive=True)
+                if st.getPath().getName().endswith(".parquet"))
+    n = max(1, -(-total // (args.target_mb * 1024 * 1024)))
+    # round-robin repartition: even file sizes, one shuffle
+    spark.read.parquet(args.infile).repartition(int(n)) \
+        .write.mode("overwrite").parquet(args.outdir)
+    n_out = sum(1 for st in _listing(spark, args.outdir)
+                if st.getPath().getName().endswith(".parquet"))
+    print(json.dumps({"input_bytes": total, "files": n_out}))
+    return 0
+
+
+def cmd_skew(args, session) -> int:
+    """'s2s skew': the top key frequencies of a column and their share
+    of the table, as one JSON line."""
+    import json
+
+    df = session().read.parquet(args.infile)
+    if _missing_columns(df, args.infile, (args.key,)):
+        return 2
+    agg = (df.groupBy(args.key).count()
+           .orderBy(F.col("count").desc(), args.key)
+           .limit(args.top).collect())
+    total = df.count()
+    n_keys = df.select(args.key).distinct().count()
+    top = [{"key": str(r[args.key]), "count": r["count"],
+            "share": round(r["count"] / total, 4) if total else 0}
+           for r in agg]
+    print(json.dumps({"rows": total, "distinct_keys": n_keys, "top": top,
+                      "top1_share": top[0]["share"] if top else 0}))
+    return 0
+
+
+def cmd_rank(args, session) -> int:
+    """'s2s rank': quantized weighted PageRank over an edge parquet
+    (operators/graph.pagerank_quantized); writes id + rank_q + rank
+    parquet and prints the node count and top three as one JSON line."""
+    import json
+
+    from stream2segment_spark.operators.graph import pagerank_quantized
+    spark = session()
+    df = spark.read.parquet(args.infile)
+    if _missing_columns(df, args.infile, (args.src, args.dst, args.weight)):
+        return 2
+    try:
+        ranks = pagerank_quantized(df, src=args.src, dst=args.dst,
+                                   weight=args.weight,
+                                   iterations=args.iterations)
+    except ValueError as exc:
+        print(f"error: {exc}", file=sys.stderr)
+        return 2
+    ranks.withColumn("rank", F.round(F.col("rank_q") / F.lit(1e9), 9)) \
+        .write.mode("overwrite").parquet(args.outfile)
+    back = spark.read.parquet(args.outfile)
+    n, top = back.count(), back.orderBy(
+        F.col("rank_q").desc(), "id").limit(3).collect()
+    print(json.dumps({
+        "nodes": n, "iterations": args.iterations,
+        "top": [{"id": str(r["id"]), "rank": r["rank"]} for r in top]}))
+    return 0
+
+
+def cmd_layout(args, session) -> int:
+    """'s2s layout': rewrite a parquet table range-clustered by one key,
+    or Z-ordered by two to four integer keys (sinks/layout), and print
+    the per-file key intervals as JSON."""
+    import json
+
+    from stream2segment_spark.sinks.layout import (
+        file_key_ranges, int_cell, write_range_layout, write_zorder_layout)
+    df = session().read.parquet(args.infile)
+    keys = [k.strip() for k in args.key.split(",")]
+    if _missing_columns(df, args.infile, keys):
+        return 2
+    if len(keys) == 1:
+        write_range_layout(df, args.outdir, keys[0], args.files)
+    else:
+        if not args.domains:
+            print("error: multi-column --key needs --domains lo:hi per "
+                  "column", file=sys.stderr)
+            return 2
+        doms = [tuple(int(x) for x in d.split(":"))
+                for d in args.domains.split(",")]
+        if len(doms) != len(keys):
+            print(f"error: {len(keys)} keys but {len(doms)} domains",
+                  file=sys.stderr)
+            return 2
+        cells = {k: int_cell(F.col(k), lo, hi, args.bits)
+                 for k, (lo, hi) in zip(keys, doms)}
+        write_zorder_layout(df, args.outdir, cells, args.files,
+                            bits=args.bits)
+    print(json.dumps([{"key": k, "file": f, "min": str(lo), "max": str(hi)}
+                      for k in keys
+                      for f, lo, hi in file_key_ranges(args.outdir, k)]))
+    return 0
+
+
+def cmd_bpe_apply(args, session) -> int:
+    """'s2s bpe-apply': segment a corpus parquet with a merge table from
+    'bpe-train' (functions/bpe) and write id + subword tokens + token
+    count parquet."""
+    import json
+
+    from stream2segment_spark.functions.bpe import bpe_segment_udf
+    try:
+        with open(args.merges, encoding="utf-8") as fh:
+            table = [json.loads(line) for line in fh if line.strip()]
+        merges = [(m["left"], m["right"], int(m.get("count", 0)))
+                  for m in table]
+    except (OSError, ValueError, KeyError, TypeError) as exc:
+        print(f"error: cannot read merge table {args.merges!r}: {exc}",
+              file=sys.stderr)
+        return 2
+    spark = session()
+    docs = spark.read.parquet(args.infile)
+    if _missing_columns(docs, args.infile, (args.id_col, args.text_col)):
+        return 2
+    seg = bpe_segment_udf(merges)
+    (docs.select(F.col(args.id_col),
+                 F.flatten(seg(F.col(args.text_col))).alias("tokens"))
+     .withColumn("n_tokens", F.size("tokens"))
+     .write.mode("overwrite").parquet(args.outfile))
+    n_docs, n_toks = spark.read.parquet(args.outfile).select(
+        F.count("*"), F.sum("n_tokens")).collect()[0]
+    print(f"segmented {n_docs} document(s), {n_toks or 0} "
+          f"subword token(s) with {len(merges)} merge(s)")
+    return 0
+
+
+def cmd_sql(args, session) -> int:
+    """'s2s sql': run one Spark SQL statement over a directory of
+    parquet tables, each <name>.parquet registered as view <name>
+    (testdata-shaped directories also get the derived-column views);
+    prints rows as JSON lines or writes parquet."""
+    import json
+
+    from stream2segment_spark.schema import (
+        infer_graph_schemas, load_table, testdata_graph)
+    from stream2segment_spark.sql_views import register_sql_views
+    spark = session()
+    dfs = {}
+    for fname in sorted(st.getPath().getName()
+                        for st in _listing(spark, args.indir)):
+        if not fname.endswith(".parquet"):
+            continue
+        name = fname[:-len(".parquet")]
+        try:
+            dfs[name] = load_table(spark, args.indir, name)
+        except Exception:
+            dfs[name] = spark.read.parquet(os.path.join(args.indir, fname))
+    if not dfs:
+        print(f"error: no *.parquet tables in {args.indir}", file=sys.stderr)
+        return 2
+    try:  # testdata-shaped dirs additionally get derived views
+        register_sql_views(spark, infer_graph_schemas(testdata_graph(), dfs),
+                           dfs)
+    except Exception:
+        for name, df in dfs.items():
+            df.createOrReplaceTempView(name)
+    out = spark.sql(args.statement)
+    if args.outfile:
+        out.write.mode("overwrite").parquet(args.outfile)
+        print(json.dumps({"written": args.outfile}))
+    else:
+        for r in out.limit(args.limit).collect():
+            print(json.dumps(r.asDict(), default=str))
+    return 0
+
+
+def cmd_explain(args, session) -> int:
+    """'s2s explain': print the plan of a catalog entry in the chosen
+    explain mode."""
+    from stream2segment_spark import queries_catalog
+    qs = queries_catalog.queries()
+    if args.entry not in qs:
+        print(f"error: unknown entry {args.entry!r} (choose from: "
+              f"{', '.join(sorted(qs))})", file=sys.stderr)
+        return 2
+    df = qs[args.entry](session(), args.sf_dir)
+    print(df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), args.mode))
+    return 0
+
+
+def cmd_profile(args, session) -> int:
+    """'s2s profile': per-column profile of a parquet table
+    (operators/profile), one JSON line per (column, top value); with
+    ``--emit-rules``, also the inferred data-quality contract for
+    's2s validate'."""
+    import json
+
+    from stream2segment_spark.operators.profile import (
+        profile_rules, profile_table)
+    df = session().read.parquet(args.infile)
+    cols = args.columns.split(",") if args.columns else None
+    prof = profile_table(df, cols, hll_m=args.hll_m, top_k=args.top)
+    # rows bounded by n_columns * top_k — presentation collect
+    rows = prof.orderBy("col_name", "top_rank").collect()
+    for r in rows:
+        d = r.asDict()
+        d["n_distinct_est"] = round(d["n_distinct_est"], 1) \
+            if d["n_distinct_est"] is not None else None
+        print(json.dumps(d))
+    if args.emit_rules:
+        rules = profile_rules(rows, df.schema)
+        with open(args.emit_rules, "w") as fh:
+            json.dump(rules, fh, indent=1, sort_keys=True)
+        print(json.dumps({"rules": args.emit_rules, "columns": len(rules)}))
+    return 0
+
+
+def cmd_diff(args, session) -> int:
+    """'s2s diff': per-id added/removed/changed/unchanged counts between
+    two snapshots of a corpus (operators/versioning), as one JSON line;
+    ``-o`` also writes the per-id status table."""
+    import json
+
+    from stream2segment_spark.operators.versioning import (
+        corpus_diff, diff_summary)
+    spark = session()
+    cols = args.cols.split(",") if args.cols else None
+    d = corpus_diff(spark.read.parquet(args.old),
+                    spark.read.parquet(args.new), args.id_col, cols)
+    if args.outfile:
+        d.write.mode("overwrite").parquet(args.outfile)
+        d = spark.read.parquet(args.outfile)  # reuse, not recompute
+    counts = {r["status"]: r["n_docs"] for r in diff_summary(d).collect()}
+    print(json.dumps({s: int(counts.get(s, 0)) for s in
+                      ("added", "removed", "changed", "unchanged")}))
+    return 0
+
+
+def cmd_ingest(args, session) -> int:
+    """'s2s ingest': append the parquet drops of a landing directory to
+    a corpus table, exactly once (streaming/corpus)."""
+    from stream2segment_spark.streaming.corpus import (
+        ingest_documents_stream)
+    out = ingest_documents_stream(
+        session(), args.landing_dir, args.corpus, args.schema,
+        checkpoint_dir=args.checkpoint,
+        neardup_threshold=args.neardup_threshold)
+    print(f"corpus now holds {out.count()} document(s) at {args.corpus}")
+    return 0
+
+
+def cmd_init(args, session) -> int:
     """'s2s init': write editable template files to OUTDIR."""
     import shutil
 
+    outdir = args.outdir
     os.makedirs(outdir, exist_ok=True)
     here = os.path.dirname(__file__)
     written = []
@@ -1137,16 +1593,24 @@ def cmd_init(outdir: str) -> int:
     return 0
 
 
-def main(argv: list[str] | None = None) -> int:
+def _parser() -> argparse.ArgumentParser:
+    """The command table: one subparser per command, each naming its
+    handler with ``set_defaults(run=...)``."""
     ap = argparse.ArgumentParser(
         prog="s2s-spark", description="stream2segment on Spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
     p = sub.add_parser("init", help="write template config files")
+    p.set_defaults(run=cmd_init)
     p.add_argument("outdir")
-    for name in ("download", "process", "show", "dl-stats", "dl-summary",
-                 "dl-log", "dl-config", "db-drop", "db-classlabel"):
+    for name, run in (("download", _run_download), ("process", _run_process),
+                      ("show", cmd_show), ("dl-stats", cmd_dl_stats),
+                      ("dl-summary", cmd_dl_summary),
+                      ("dl-log", cmd_dl_text), ("dl-config", cmd_dl_text),
+                      ("db-drop", cmd_db_drop),
+                      ("db-classlabel", cmd_db_classlabel)):
         p = sub.add_parser(name)
+        p.set_defaults(run=run)
         p.add_argument("-c", "--config", required=True)
         if name == "process":
             p.add_argument("-p", "--pyfunc", required=True,
@@ -1187,6 +1651,7 @@ def main(argv: list[str] | None = None) -> int:
         "import-db",
         help="import an existing stream2segment SQLite/Postgres database "
              "into the parquet warehouse")
+    p.set_defaults(run=cmd_import_db)
     p.add_argument("-c", "--config", required=True,
                    help="config with the target 'warehouse' directory")
     p.add_argument("-d", "--dburl", required=True,
@@ -1196,6 +1661,7 @@ def main(argv: list[str] | None = None) -> int:
         "export-db",
         help="write the parquet warehouse to a stream2segment SQLite "
              "database (reference schema; readable by the reference GUI)")
+    p.set_defaults(run=cmd_export_db)
     p.add_argument("-c", "--config", required=True,
                    help="config with the source 'warehouse' directory")
     p.add_argument("-o", "--outfile", required=True,
@@ -1204,6 +1670,7 @@ def main(argv: list[str] | None = None) -> int:
         "tt-create",
         help="build a travel-time npz table from a 1-D velocity model "
              "(depth_km,vp_km_s[,vs_km_s] csv, or 'demo')")
+    p.set_defaults(run=cmd_tt_create)
     p.add_argument("-m", "--model", required=True,
                    help="velocity model csv path, or 'demo'")
     p.add_argument("-o", "--outfile", required=True, help="output .npz")
@@ -1219,6 +1686,7 @@ def main(argv: list[str] | None = None) -> int:
         help="run the corpus-curation funnel on a documents parquet "
              "(filter -> dedup -> near-dedup -> split [-> line-dedup/"
              "mix/pack]; beyond-reference)")
+    p.set_defaults(run=_run_curate)
     p.add_argument("-i", "--infile", required=True,
                    help="input parquet with doc_id/text columns")
     p.add_argument("-o", "--outdir", required=True)
@@ -1367,6 +1835,7 @@ def main(argv: list[str] | None = None) -> int:
         help="keyword search over a corpus parquet: BM25-style "
              "inverted-index scoring, top-k per query term "
              "(beyond-reference)")
+    p.set_defaults(run=cmd_search)
     p.add_argument("-i", "--infile", default=None,
                    help="corpus parquet (needs id + text columns); "
                         "not needed when querying via --index")
@@ -1393,6 +1862,7 @@ def main(argv: list[str] | None = None) -> int:
         "bpe-train",
         help="train a BPE merge table over a corpus parquet and write "
              "it as JSON lines (beyond-reference)")
+    p.set_defaults(run=cmd_bpe_train)
     p.add_argument("-i", "--infile", required=True,
                    help="corpus parquet (needs a text column)")
     p.add_argument("-o", "--outfile", required=True,
@@ -1417,6 +1887,7 @@ def main(argv: list[str] | None = None) -> int:
         help="extract the phase sub-blocks of an ISF bulletin (which "
              "the event converter skips, like the reference) into a "
              "structured phases parquet")
+    p.set_defaults(run=cmd_isf_phases)
     p.add_argument("-i", "--infile", required=True,
                    help="ISF bulletin text file")
     p.add_argument("-o", "--outfile", required=True,
@@ -1426,6 +1897,7 @@ def main(argv: list[str] | None = None) -> int:
         help="train a bigram LM (add-one smoothed) over a corpus "
              "parquet and save it as a model directory "
              "(beyond-reference)")
+    p.set_defaults(run=cmd_lm_train)
     p.add_argument("-i", "--infile", required=True,
                    help="corpus parquet (needs a text column)")
     p.add_argument("-o", "--outdir", required=True,
@@ -1445,6 +1917,7 @@ def main(argv: list[str] | None = None) -> int:
              "transition probability per document; self-trains when "
              "no --model is given) and write id + n_trans + lm_score "
              "parquet (beyond-reference)")
+    p.set_defaults(run=cmd_lm_score)
     p.add_argument("-i", "--infile", required=True,
                    help="corpus parquet (needs id + text columns)")
     p.add_argument("-m", "--model", default=None,
@@ -1467,6 +1940,7 @@ def main(argv: list[str] | None = None) -> int:
         "compact",
         help="rewrite a parquet table into files of a target size "
              "(small-files maintenance after incremental appends)")
+    p.set_defaults(run=cmd_compact)
     p.add_argument("-i", "--infile", required=True, help="input parquet")
     p.add_argument("-o", "--outdir", required=True, help="output path")
     p.add_argument("--target-mb", type=int, default=256,
@@ -1476,6 +1950,7 @@ def main(argv: list[str] | None = None) -> int:
         help="key-skew diagnostic: top key frequencies and their share "
              "of the table, as one JSON line (the pre-flight check "
              "before keyed joins/aggs on a new column)")
+    p.set_defaults(run=cmd_skew)
     p.add_argument("-i", "--infile", required=True, help="input parquet")
     p.add_argument("--key", required=True, help="column to profile")
     p.add_argument("--top", type=int, default=10)
@@ -1486,6 +1961,7 @@ def main(argv: list[str] | None = None) -> int:
              "partitionings; operators/graph.pagerank_quantized); "
              "writes id + rank_q + rank parquet (beyond-reference, "
              "host/domain quality signal)")
+    p.set_defaults(run=cmd_rank)
     p.add_argument("-i", "--infile", required=True,
                    help="edge parquet (src, dst [, weight])")
     p.add_argument("-o", "--outfile", required=True,
@@ -1501,6 +1977,7 @@ def main(argv: list[str] | None = None) -> int:
              "files with disjoint min/max footer stats, so range "
              "filters prune whole files) and print the per-file key "
              "intervals as JSON")
+    p.set_defaults(run=cmd_layout)
     p.add_argument("-i", "--infile", required=True, help="input parquet")
     p.add_argument("-o", "--outdir", required=True, help="output path")
     p.add_argument("--key", required=True,
@@ -1521,6 +1998,7 @@ def main(argv: list[str] | None = None) -> int:
         help="parse image/audio/video container headers of a binary "
              "column (PNG/JPEG/GIF/WAV/MP4/AVI metadata planes, no "
              "codecs); prints JSON rows or writes parquet")
+    p.set_defaults(run=cmd_media_probe)
     p.add_argument("-i", "--infile", required=True, help="input parquet")
     p.add_argument("--col", default="content", dest="content_col",
                    help="binary column (default 'content')")
@@ -1535,6 +2013,7 @@ def main(argv: list[str] | None = None) -> int:
              "(not_null_frac/min_ge/max_le/unique/allowed_values/"
              "matches per column; one aggregation pass); exit 1 on "
              "any failed rule")
+    p.set_defaults(run=cmd_validate)
     p.add_argument("-i", "--infile", required=True, help="input parquet")
     p.add_argument("-r", "--rules", required=True,
                    help='JSON file: {"col": {"rule": threshold, ...}}')
@@ -1542,6 +2021,7 @@ def main(argv: list[str] | None = None) -> int:
         "hist",
         help="histogram-sketch quantile estimates of a numeric column "
              "(bounded state; auto-ranges with one min/max pre-pass)")
+    p.set_defaults(run=cmd_hist)
     p.add_argument("-i", "--infile", required=True, help="input parquet")
     p.add_argument("--col", required=True, help="numeric column")
     p.add_argument("--bins", type=int, default=256)
@@ -1557,6 +2037,7 @@ def main(argv: list[str] | None = None) -> int:
         help="exact single-pass correlation matrix of numeric columns "
              "(fixed-point co-moments: deterministic under any "
              "partitioning, unlike double accumulators)")
+    p.set_defaults(run=cmd_corr)
     p.add_argument("-i", "--infile", required=True, help="input parquet")
     p.add_argument("--cols", required=True,
                    help="comma-separated numeric columns (>= 2)")
@@ -1575,6 +2056,7 @@ def main(argv: list[str] | None = None) -> int:
              "threshold (S-curve FP/FN mass minimization; driver-side "
              "math only) and optionally validate against a parquet of "
              "exact-Jaccard pairs")
+    p.set_defaults(run=cmd_lsh_tune)
     p.add_argument("--threshold", type=float, required=True,
                    help="design similarity threshold in (0, 1)")
     p.add_argument("--n-perm", type=int, default=64,
@@ -1594,6 +2076,7 @@ def main(argv: list[str] | None = None) -> int:
         help="ingest Common Crawl WARC/WET archive(s) into a documents "
              "parquet (scan-stage expression parse; doc_id derived from "
              "the URI md5)")
+    p.set_defaults(run=cmd_ingest_wet)
     p.add_argument("-i", "--inpath", required=True,
                    help="WET file, directory or glob")
     p.add_argument("-o", "--outfile", required=True,
@@ -1606,6 +2089,7 @@ def main(argv: list[str] | None = None) -> int:
         help="export a parquet table as JSON-lines shards (the standard "
              "training-data delivery format; optional gzip, optional "
              "column selection and shard count)")
+    p.set_defaults(run=cmd_export_jsonl)
     p.add_argument("-i", "--infile", required=True, help="input parquet")
     p.add_argument("-o", "--outdir", required=True,
                    help="output directory of part-*.json[.gz] shards")
@@ -1623,6 +2107,7 @@ def main(argv: list[str] | None = None) -> int:
              "label + score + pred parquet; with --text-col the "
              "features are hash-n-gram embeddings of the text "
              "(beyond-reference)")
+    p.set_defaults(run=cmd_classify)
     p.add_argument("-i", "--infile", required=True,
                    help="parquet with id + label (+ vector or text)")
     p.add_argument("-o", "--outfile", required=True,
@@ -1652,6 +2137,7 @@ def main(argv: list[str] | None = None) -> int:
         help="DSIR importance resampling: select the raw-parquet "
              "documents whose hashed-n-gram profile best matches a "
              "target parquet (beyond-reference; Xie et al. 2023)")
+    p.set_defaults(run=cmd_dsir_select)
     p.add_argument("-i", "--infile", required=True,
                    help="raw candidate pool parquet (id + text)")
     p.add_argument("-t", "--target", required=True,
@@ -1681,6 +2167,7 @@ def main(argv: list[str] | None = None) -> int:
         help="segment a corpus parquet with a trained BPE merge table "
              "(from 's2s bpe-train') and write doc_id + subword tokens "
              "+ token count as parquet (beyond-reference)")
+    p.set_defaults(run=cmd_bpe_apply)
     p.add_argument("-i", "--infile", required=True,
                    help="corpus parquet (needs id + text columns)")
     p.add_argument("-m", "--merges", required=True,
@@ -1696,6 +2183,7 @@ def main(argv: list[str] | None = None) -> int:
              "tables (each <name>.parquet registered as view <name>; "
              "testdata-graph dirs also get the <t>_v derived-column "
              "views); prints rows as JSON lines or writes parquet")
+    p.set_defaults(run=cmd_sql)
     p.add_argument("statement", help="the SQL statement")
     p.add_argument("-i", "--indir", required=True,
                    help="directory of <name>.parquet tables")
@@ -1707,6 +2195,7 @@ def main(argv: list[str] | None = None) -> int:
         "explain",
         help="print the optimized + physical plan of a catalog entry "
              "(the per-operator plan-shape debugging surface)")
+    p.set_defaults(run=cmd_explain)
     p.add_argument("entry", help="catalog entry name (see queries())")
     p.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     p.add_argument("--mode", default="formatted",
@@ -1716,6 +2205,7 @@ def main(argv: list[str] | None = None) -> int:
         help="profile a parquet table: per-column nulls, typed min/max, "
              "HLL distinct estimate, top values — two jobs total "
              "(beyond-reference data-quality overview)")
+    p.set_defaults(run=cmd_profile)
     p.add_argument("-i", "--infile", required=True,
                    help="parquet table path")
     p.add_argument("--columns", default=None,
@@ -1735,6 +2225,7 @@ def main(argv: list[str] | None = None) -> int:
         help="diff two parquet snapshots of a corpus: per-id added/"
              "removed/changed/unchanged from one fingerprint join "
              "(beyond-reference dataset versioning)")
+    p.set_defaults(run=cmd_diff)
     p.add_argument("old", help="old snapshot parquet path")
     p.add_argument("new", help="new snapshot parquet path")
     p.add_argument("--id-col", default="doc_id")
@@ -1749,6 +2240,7 @@ def main(argv: list[str] | None = None) -> int:
              "directory into a corpus table (checkpointed exactly-once; "
              "exact dedup vs history, optional near-dedup; "
              "beyond-reference)")
+    p.set_defaults(run=cmd_ingest)
     p.add_argument("-i", "--landing-dir", required=True,
                    help="directory watched for parquet drops")
     p.add_argument("-o", "--corpus", required=True,
@@ -1760,744 +2252,36 @@ def main(argv: list[str] | None = None) -> int:
                         "(MinHash signatures stored with the corpus)")
     p.add_argument("--checkpoint", default=None,
                    help="checkpoint dir (default: <corpus>__checkpoint)")
-    args = ap.parse_args(argv)
+    return ap
 
-    if args.cmd == "init":
-        return cmd_init(args.outdir)
-    if args.cmd == "tt-create":
-        if args.local:
-            return cmd_tt_create(None, args.model, args.outfile, args.phase,
-                                 args.tolerance, args.maxdepth, args.maxdist)
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-tt-create")
-        try:
-            return cmd_tt_create(spark, args.model, args.outfile, args.phase,
-                                 args.tolerance, args.maxdepth, args.maxdist)
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "compact":  # no config file: all-flags command
-        import json as _json
-        import os as _os
 
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-compact")
-        try:
-            total = sum(
-                _os.path.getsize(_os.path.join(r, f))
-                for r, _, fs in _os.walk(args.infile) for f in fs
-                if f.endswith(".parquet"))
-            n = max(1, -(-total // (args.target_mb * 1024 * 1024)))
-            df = spark.read.parquet(args.infile)
-            # round-robin repartition: even file sizes, one shuffle
-            df.repartition(int(n)).write.mode("overwrite") \
-                .parquet(args.outdir)
-            n_out = sum(1 for f in _os.listdir(args.outdir)
-                        if f.endswith(".parquet"))
-            print(_json.dumps({"input_bytes": total, "files": n_out}))
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "sql":  # no config file: all-flags command
-        import glob as _glob
-        import json as _json
+def main(argv: list[str] | None = None) -> int:
+    """Parse ``argv`` and run the command's handler as
+    ``args.run(args, session)``; ``args.cfg`` holds the loaded ``-c``
+    config of the commands that take one.
 
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-sql")
-        try:
-            dfs = {}
-            for path in sorted(_glob.glob(
-                    os.path.join(args.indir, "*.parquet"))):
-                name = os.path.splitext(os.path.basename(path))[0]
-                from stream2segment_spark.schema import load_table
-                try:
-                    dfs[name] = load_table(spark, args.indir, name)
-                except Exception:
-                    dfs[name] = spark.read.parquet(path)
-            if not dfs:
-                print(f"error: no *.parquet tables in {args.indir}",
-                      file=sys.stderr)
-                return 2
-            try:  # testdata-shaped dirs additionally get derived views
-                from stream2segment_spark.schema import (
-                    infer_graph_schemas, testdata_graph)
-                from stream2segment_spark.sql_views import (
-                    register_sql_views)
-                graph = infer_graph_schemas(testdata_graph(), dfs)
-                register_sql_views(spark, graph, dfs)
-            except Exception:
-                for name, df in dfs.items():
-                    df.createOrReplaceTempView(name)
-            out = spark.sql(args.statement)
-            if args.outfile:
-                out.write.mode("overwrite").parquet(args.outfile)
-                print(_json.dumps({"written": args.outfile}))
-            else:
-                for r in out.limit(args.limit).collect():
-                    print(_json.dumps(r.asDict(), default=str))
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "explain":  # no config file: all-flags command
-        from stream2segment_spark import queries_catalog
-        from stream2segment_spark.session import get_spark
-        qs = queries_catalog.queries()
-        if args.entry not in qs:
-            print(f"error: unknown entry {args.entry!r} (choose from: "
-                  f"{', '.join(sorted(qs))})", file=sys.stderr)
-            return 2
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-explain")
-        try:
-            df = qs[args.entry](spark, args.sf_dir)
-            print(df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), args.mode))
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "profile":  # no config file: all-flags command
-        import json as _json
+    ``session()`` starts (or joins) the Spark session on its first call
+    only, so driver-only commands and input errors caught before it
+    start no JVM. Only a session this call created is stopped at the
+    end (getOrCreate may hand us a host application's session:
+    embedding callers keep theirs)."""
+    args = _parser().parse_args(argv)
+    if "config" in args:
+        args.cfg = _load_cfg(args.config)
+    spark, preexisting = None, True
 
-        from stream2segment_spark.operators.profile import profile_table
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-profile")
-        try:
-            df = spark.read.parquet(args.infile)
-            cols = args.columns.split(",") if args.columns else None
-            prof = profile_table(df, cols, hll_m=args.hll_m,
-                                 top_k=args.top)
-            # rows bounded by n_columns * top_k — presentation collect
-            rows = prof.orderBy("col_name", "top_rank").collect()
-            for r in rows:
-                d = r.asDict()
-                d["n_distinct_est"] = round(d["n_distinct_est"], 1) \
-                    if d["n_distinct_est"] is not None else None
-                print(_json.dumps(d))
-            if args.emit_rules:
-                import math
-                numeric = {f.name for f in df.schema.fields
-                           if f.dataType.typeName() in
-                           ("integer", "long", "short", "byte", "float",
-                            "double", "decimal")}
-                rules: dict = {}
-                for r in rows:
-                    if r["top_rank"] != 1:
-                        continue
-                    c, n = r["col_name"], r["n_rows"]
-                    nn = (n - r["n_nulls"]) / n if n else 1.0
-                    rc = {"not_null_frac": math.floor(nn * 100) / 100}
-                    if c in numeric and r["min_str"] is not None:
-                        rc["min_ge"] = float(r["min_str"])
-                        rc["max_le"] = float(r["max_str"])
-                    rules[c] = rc
-                with open(args.emit_rules, "w") as fh:
-                    _json.dump(rules, fh, indent=1, sort_keys=True)
-                print(_json.dumps({"rules": args.emit_rules,
-                                   "columns": len(rules)}))
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "diff":  # no config file: all-flags command
-        import json as _json
+    def session() -> SparkSession:
+        nonlocal spark, preexisting
+        if spark is None:
+            from stream2segment_spark.session import get_spark
+            preexisting = SparkSession.getActiveSession() is not None
+            spark = get_spark(app_name=f"s2s-{args.cmd}")
+        return spark
 
-        from stream2segment_spark.operators.versioning import (
-            corpus_diff, diff_summary)
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-diff")
-        try:
-            old = spark.read.parquet(args.old)
-            new = spark.read.parquet(args.new)
-            cols = args.cols.split(",") if args.cols else None
-            d = corpus_diff(old, new, args.id_col, cols)
-            if args.outfile:
-                d.write.mode("overwrite").parquet(args.outfile)
-                d = spark.read.parquet(args.outfile)  # reuse, not recompute
-            counts = {r["status"]: r["n_docs"]
-                      for r in diff_summary(d).collect()}
-            print(_json.dumps({s: int(counts.get(s, 0)) for s in
-                               ("added", "removed", "changed",
-                                "unchanged")}))
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "rank":  # no config file: all-flags command
-        import json as _json
-
-        from pyspark.sql import functions as _F
-
-        from stream2segment_spark.operators.graph import pagerank_quantized
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-rank")
-        try:
-            df = spark.read.parquet(args.infile)
-            need = [c for c in (args.src, args.dst, args.weight)
-                    if c is not None]
-            missing = [c for c in need if c not in df.columns]
-            if missing:
-                print(f"error: {args.infile} lacks column(s) {missing} "
-                      f"(has: {sorted(df.columns)})", file=sys.stderr)
-                return 2
-            try:
-                ranks = pagerank_quantized(
-                    df, src=args.src, dst=args.dst, weight=args.weight,
-                    iterations=args.iterations)
-            except ValueError as exc:
-                print(f"error: {exc}", file=sys.stderr)
-                return 2
-            out = ranks.withColumn(
-                "rank", _F.round(_F.col("rank_q") / _F.lit(1e9), 9))
-            out.write.mode("overwrite").parquet(args.outfile)
-            back = spark.read.parquet(args.outfile)
-            n, top = back.count(), back.orderBy(
-                _F.col("rank_q").desc(), "id").limit(3).collect()
-            print(_json.dumps({
-                "nodes": n, "iterations": args.iterations,
-                "top": [{"id": str(r["id"]), "rank": r["rank"]}
-                        for r in top]}))
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "skew":  # no config file: all-flags command
-        import json as _json
-
-        from pyspark.sql import functions as _F
-
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-skew")
-        try:
-            df = spark.read.parquet(args.infile)
-            if args.key not in df.columns:
-                print(f"error: {args.infile} lacks column {args.key!r} "
-                      f"(has: {sorted(df.columns)})", file=sys.stderr)
-                return 2
-            agg = (df.groupBy(args.key).count()
-                   .orderBy(_F.col("count").desc(), args.key)
-                   .limit(args.top).collect())
-            total = df.count()
-            n_keys = df.select(args.key).distinct().count()
-            top = [{"key": str(r[args.key]), "count": r["count"],
-                    "share": round(r["count"] / total, 4) if total else 0}
-                   for r in agg]
-            print(_json.dumps({
-                "rows": total, "distinct_keys": n_keys,
-                "top": top,
-                "top1_share": top[0]["share"] if top else 0}))
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "layout":  # no config file: all-flags command
-        import json as _json
-
-        from stream2segment_spark.session import get_spark
-        from stream2segment_spark.sinks.layout import (
-            file_key_ranges, int_cell, write_range_layout,
-            write_zorder_layout)
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-layout")
-        try:
-            df = spark.read.parquet(args.infile)
-            keys = [k.strip() for k in args.key.split(",")]
-            missing = [k for k in keys if k not in df.columns]
-            if missing:
-                print(f"error: {args.infile} lacks column(s) {missing} "
-                      f"(has: {sorted(df.columns)})", file=sys.stderr)
-                return 2
-            if len(keys) == 1:
-                write_range_layout(df, args.outdir, keys[0], args.files)
-            else:
-                if not args.domains:
-                    print("error: multi-column --key needs --domains "
-                          "lo:hi per column", file=sys.stderr)
-                    return 2
-                doms = [tuple(int(x) for x in d.split(":"))
-                        for d in args.domains.split(",")]
-                if len(doms) != len(keys):
-                    print(f"error: {len(keys)} keys but {len(doms)} "
-                          "domains", file=sys.stderr)
-                    return 2
-                cells = {k: int_cell(F.col(k), lo, hi, args.bits)
-                         for k, (lo, hi) in zip(keys, doms)}
-                write_zorder_layout(df, args.outdir, cells, args.files,
-                                    bits=args.bits)
-            print(_json.dumps([
-                {"key": k, "file": f, "min": str(lo), "max": str(hi)}
-                for k in keys
-                for f, lo, hi in file_key_ranges(args.outdir, k)]))
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "media-probe":  # no config file: all-flags command
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-media-probe")
-        try:
-            return cmd_media_probe(spark, args.infile, args.content_col,
-                                   args.id_col, args.outfile, args.limit)
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "validate":  # no config file: all-flags command
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-validate")
-        try:
-            return cmd_validate(spark, args.infile, args.rules)
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "hist":  # no config file: all-flags command
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-hist")
-        try:
-            return cmd_hist(spark, args.infile, args.col, args.bins,
-                            args.quantiles, args.lo, args.hi,
-                            args.group_by)
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "corr":  # no config file: all-flags command
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-corr")
-        try:
-            return cmd_corr(spark, args.infile, args.cols, args.scale,
-                            args.group_by, method=args.method)
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "lsh-tune":  # no config file: all-flags command
-        if args.pairs is None:  # pure driver-side math, no session
-            return cmd_lsh_tune(args.threshold, args.n_perm, args.banded,
-                                args.fp_weight, args.fn_weight)
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-lsh-tune")
-        try:
-            return cmd_lsh_tune(args.threshold, args.n_perm, args.banded,
-                                args.fp_weight, args.fn_weight,
-                                pairs=args.pairs,
-                                jaccard_col=args.jaccard_col, spark=spark)
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "ingest-wet":  # no config file: all-flags command
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-ingest-wet")
-        try:
-            return cmd_ingest_wet(spark, args.inpath, args.outfile,
-                                  args.keep_bad)
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "export-jsonl":  # no config file: all-flags command
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-export-jsonl")
-        try:
-            return cmd_export_jsonl(spark, args.infile, args.outdir,
-                                    args.columns, args.shards, args.gzip)
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "classify":  # no config file: all-flags command
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-classify")
-        try:
-            return cmd_classify(spark, args.infile, args.outfile,
-                                args.id_col, args.label_col,
-                                args.vec_col, args.text_col,
-                                args.iters, args.lr,
-                                weights_out=args.weights_out,
-                                tokenizer=args.tokenizer)
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "dsir-select":  # no config file: all-flags command
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-dsir")
-        try:
-            return cmd_dsir_select(spark, args.infile, args.target,
-                                   args.outfile, args.id_col,
-                                   args.text_col, args.k, args.buckets,
-                                   args.mode, args.method,
-                                   args.temperature,
-                                   tokenizer=args.tokenizer)
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "ingest":  # no config file: all-flags command
-        from stream2segment_spark.session import get_spark
-        from stream2segment_spark.streaming.corpus import (
-            ingest_documents_stream)
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-ingest")
-        try:
-            out = ingest_documents_stream(
-                spark, args.landing_dir, args.corpus, args.schema,
-                checkpoint_dir=args.checkpoint,
-                neardup_threshold=args.neardup_threshold)
-            print(f"corpus now holds {out.count()} document(s) "
-                  f"at {args.corpus}")
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "bpe-train":  # no config file: all-flags command
-        import json
-
-        from stream2segment_spark.functions.bpe import (
-            bpe_train, bpe_train_batched, bpe_train_collected)
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-bpe-train")
-        try:
-            if args.merges <= 0:
-                print(f"error: --merges must be positive, got "
-                      f"{args.merges}", file=sys.stderr)
-                return 2
-            docs = spark.read.parquet(args.infile)
-            if args.text_col not in docs.columns:
-                print(f"error: {args.infile} lacks column "
-                      f"{args.text_col!r} (has: {sorted(docs.columns)})",
-                      file=sys.stderr)
-                return 2
-            if args.batch > 1 and args.collect_vocab:
-                print("error: --collect-vocab trains in canonical order; "
-                      "it is incompatible with --batch > 1",
-                      file=sys.stderr)
-                return 2
-            if args.batch > 1:
-                merges, words = bpe_train_batched(
-                    docs, args.text_col, args.merges, batch=args.batch)
-            elif args.collect_vocab:
-                merges, words = bpe_train_collected(
-                    docs, args.text_col, args.merges,
-                    max_words=args.max_words)
-            else:
-                merges, words = bpe_train(docs, args.text_col, args.merges)
-            n_words, n_syms = words.select(
-                F.count("*"), F.sum(F.size("syms"))).collect()[0]
-            words.unpersist()
-            with open(args.outfile, "w", encoding="utf-8") as fh:
-                for left, right, cnt in merges:
-                    fh.write(json.dumps({"left": left, "right": right,
-                                         "count": cnt}) + "\n")
-            print(f"trained {len(merges)} merge(s); vocabulary "
-                  f"{n_words} word(s), {n_syms or 0} symbol occurrence(s)")
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "isf-phases":  # no config file: all-flags command
-        from stream2segment_spark.session import get_spark
-        from stream2segment_spark.sources.isf import isf_phases_df
-        try:
-            with open(args.infile, encoding="utf-8",
-                      errors="replace") as fh:
-                text = fh.read()
-        except OSError as exc:
-            print(f"error: cannot read {args.infile!r}: {exc}",
-                  file=sys.stderr)
-            return 2
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-isf-phases")
-        try:
-            df = isf_phases_df(spark, text)
-            df.write.mode("overwrite").parquet(args.outfile)
-            n = spark.read.parquet(args.outfile).count()
-            print(f"extracted {n} phase pick(s) -> {args.outfile}")
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "lm-train":  # no config file: all-flags command
-        from stream2segment_spark.functions.lm import (
-            bigram_model, save_bigram_model, save_trigram_model,
-            trigram_model)
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-lm-train")
-        try:
-            docs = spark.read.parquet(args.infile)
-            if args.text_col not in docs.columns:
-                print(f"error: {args.infile} lacks column "
-                      f"{args.text_col!r} (has: {sorted(docs.columns)})",
-                      file=sys.stderr)
-                return 2
-            if args.order == 3:
-                model = trigram_model(docs, args.text_col,
-                                      tokenizer=args.tokenizer)
-                save_trigram_model(model, args.outdir,
-                                   tokenizer=args.tokenizer)
-                vocab = model[3]
-            else:
-                model = bigram_model(docs, args.text_col,
-                                     tokenizer=args.tokenizer)
-                save_bigram_model(model, args.outdir,
-                                  tokenizer=args.tokenizer)
-                vocab = model[2]
-            n_bi = model[1].count()
-            print(f"trained order-{args.order} LM: vocabulary {vocab} "
-                  f"word(s), {n_bi} bigram(s) -> {args.outdir}")
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "lm-score":  # no config file: all-flags command
-        from stream2segment_spark.functions.lm import (
-            lm_model_tokenizer, lm_transition_scores, load_lm_model,
-            stupid_backoff_scores)
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-lm-score")
-        try:
-            docs = spark.read.parquet(args.infile)
-            missing = [c for c in (args.id_col, args.text_col)
-                       if c not in docs.columns]
-            if missing:
-                print(f"error: {args.infile} lacks column(s) {missing} "
-                      f"(has: {sorted(docs.columns)})", file=sys.stderr)
-                return 2
-            kind = "trigram" if args.order == 3 else "bigram"
-            model = None
-            tokenizer = args.tokenizer
-            if args.model is not None:
-                try:
-                    kind, model = load_lm_model(spark, args.model)
-                    # the model's recorded mode wins: scoring with a
-                    # different tokenizer than training makes every
-                    # token OOV relative to the counts (lm.py:277)
-                    tokenizer = lm_model_tokenizer(args.model)
-                except (OSError, ValueError, KeyError) as exc:
-                    print(f"error: cannot load model {args.model!r}: "
-                          f"{exc}", file=sys.stderr)
-                    return 2
-            persists: list = []
-            if kind == "trigram":
-                out = stupid_backoff_scores(docs, args.id_col,
-                                            args.text_col, model=model,
-                                            persists=persists,
-                                            tokenizer=tokenizer)
-                score_col = "sb_score"
-            else:
-                out = lm_transition_scores(docs, args.id_col,
-                                           args.text_col, model=model,
-                                           tokenizer=tokenizer)
-                score_col = "lm_score"
-            try:
-                out.write.mode("overwrite").parquet(args.outfile)
-            finally:
-                for frame in persists:
-                    frame.unpersist()
-            back = spark.read.parquet(args.outfile)
-            n, mean = back.select(
-                F.count("*"), F.avg(score_col)).collect()[0]
-            print(f"scored {n} document(s); mean {score_col} "
-                  f"{0.0 if mean is None else mean:.6f}")
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "bpe-apply":  # no config file: all-flags command
-        import json
-
-        from stream2segment_spark.functions.bpe import bpe_segment_udf
-        from stream2segment_spark.session import get_spark
-        try:
-            with open(args.merges, encoding="utf-8") as fh:
-                table = [json.loads(line) for line in fh
-                         if line.strip()]
-            merges = [(m["left"], m["right"], int(m.get("count", 0)))
-                      for m in table]
-        except (OSError, ValueError, KeyError, TypeError) as exc:
-            print(f"error: cannot read merge table {args.merges!r}: "
-                  f"{exc}", file=sys.stderr)
-            return 2
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-bpe-apply")
-        try:
-            docs = spark.read.parquet(args.infile)
-            missing = [c for c in (args.id_col, args.text_col)
-                       if c not in docs.columns]
-            if missing:
-                print(f"error: {args.infile} lacks column(s) {missing} "
-                      f"(has: {sorted(docs.columns)})", file=sys.stderr)
-                return 2
-            seg = bpe_segment_udf(merges)
-            out = (docs.select(
-                F.col(args.id_col),
-                F.flatten(seg(F.col(args.text_col))).alias("tokens"))
-                .withColumn("n_tokens", F.size("tokens")))
-            out.write.mode("overwrite").parquet(args.outfile)
-            back = spark.read.parquet(args.outfile)
-            n_docs, n_toks = back.select(
-                F.count("*"), F.sum("n_tokens")).collect()[0]
-            print(f"segmented {n_docs} document(s), {n_toks or 0} "
-                  f"subword token(s) with {len(merges)} merge(s)")
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "search":  # no config file: all-flags command
-        import json
-
-        from stream2segment_spark.operators.search import (
-            build_search_index, index_search_topk, search_topk)
-        from stream2segment_spark.session import get_spark
-        terms = args.query.split()
-        if not terms and not args.build_index:
-            print("search: empty query", file=sys.stderr)
-            return 2
-        if not args.infile and not args.index:
-            print("search: need -i corpus or --index DIR",
-                  file=sys.stderr)
-            return 2
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-search")
-        try:
-            if args.build_index:
-                if not args.infile:
-                    print("search: --build-index needs -i corpus",
-                          file=sys.stderr)
-                    return 2
-                docs = spark.read.parquet(args.infile)
-                build_search_index(docs, args.id_col, args.text_col,
-                                   args.build_index,
-                                   tokenizer=args.tokenizer)
-                print(json.dumps({"index": args.build_index,
-                                  "tokenizer": args.tokenizer}))
-                return 0
-            if args.index:
-                rows = index_search_topk(spark, args.index, terms,
-                                         k=args.topk).collect()
-                for r in rows:
-                    print(json.dumps({
-                        "term": r["term"], args.id_col: r["id"],
-                        "rank": r["rank"], "tf": r["tf"], "dl": r["dl"],
-                        "score": round(r["score"], 6)}))
-                return 0
-            docs = spark.read.parquet(args.infile)
-            missing = {args.id_col, args.text_col} - set(docs.columns)
-            if missing:
-                print(f"error: {args.infile} lacks required column(s) "
-                      f"{sorted(missing)} (has: {sorted(docs.columns)})",
-                      file=sys.stderr)
-                return 2
-            rows = search_topk(docs, args.id_col, args.text_col, terms,
-                               k=args.topk,
-                               tokenizer=args.tokenizer).collect()
-            for r in rows:
-                print(json.dumps({
-                    "term": r["term"], args.id_col: r[args.id_col],
-                    "rank": r["rank"], "tf": r["tf"], "dl": r["dl"],
-                    "score": round(r["score"], 6)}))
-            return 0
-        finally:
-            if not preexisting:
-                spark.stop()
-    if args.cmd == "curate":  # no config file: all-flags command
-        from stream2segment_spark.session import get_spark
-        preexisting = SparkSession.getActiveSession() is not None
-        spark = get_spark(app_name="s2s-curate")
-        try:
-            return cmd_curate(spark, args.infile, args.outdir,
-                              args.languages, args.min_quality,
-                              args.min_tokens, args.max_tokens,
-                              args.neardup_threshold, args.neardup_mode,
-                              args.line_max_df, args.max_dup_frac,
-                              args.cut_dup_substrings,
-                              args.mix_col, args.mix_alpha,
-                              args.pack_budget, args.pack_shards,
-                              args.semantic_k, args.min_lm_score,
-                              args.c4,
-                              ("multilang" if args.gopher_multilang
-                               else args.gopher),
-                              args.gopher_repetition,
-                              args.benchmark, args.max_contam_frac,
-                              neardup_keep=args.neardup_keep,
-                              domain_cap=args.domain_cap,
-                              domain_col=args.domain_col,
-                              tokenizer=args.tokenizer,
-                              langid_mode=args.langid_mode,
-                              multilingual_stopwords=(
-                                  args.multilingual_stopwords),
-                              against=args.against,
-                              against_signatures=args.against_signatures,
-                              write_signatures=args.write_signatures,
-                              html_extract=args.html_extract,
-                              nfc_normalize=args.nfc_normalize,
-                              classifier=args.classifier,
-                              min_classifier_score=args.min_classifier_score,
-                              pack_bestfit=args.pack_bestfit,
-                              dsir_target=args.dsir_target,
-                              dsir_k=args.dsir_k,
-                              audit=args.audit)
-        finally:
-            if not preexisting:
-                spark.stop()
-    cfg = _load_cfg(args.config)
-    if args.cmd == "export-db":  # driver-side sqlite write: no session
-        return cmd_export_db(cfg, args.outfile)
-    if args.cmd == "db-classlabel":  # driver-side only: no session needed
-        return cmd_db_classlabel(cfg, args.add, args.rename, args.delete)
-    if args.cmd == "import-db" and (
-            "://" not in args.dburl or args.dburl.startswith("sqlite://")):
-        # sqlite is a local single-file read: no Spark session needed
-        return cmd_import_db(None, cfg, args.dburl)
-    if args.cmd in ("dl-log", "dl-config"):
-        return cmd_dl_text(cfg, args.download_id, args.indices,
-                           "log" if args.cmd == "dl-log" else "config")
-
-    from stream2segment_spark.session import get_spark
-    # only stop a session this invocation created (getOrCreate may hand us
-    # a host application's session — embedding callers keep theirs)
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name=f"s2s-{args.cmd}")
     try:
-        if args.cmd == "download":
-            with open(args.config, encoding="utf-8") as fh:
-                cfg_text = fh.read()
-            return cmd_download(spark, cfg, cfg_text)
-        if args.cmd == "process":
-            return cmd_process(spark, cfg, args.pyfunc, args.outfile,
-                               args.append)
-        if args.cmd == "show":
-            if args.serve:
-                return cmd_show_serve(spark, cfg, args.port,
-                                      args.plot_module, args.annotator)
-            if not args.outfile:
-                raise SystemExit("show: -o/--outfile is required "
-                                 "(or pass --serve)")
-            return cmd_show(spark, cfg, args.outfile, args.max_segments,
-                            args.plot_module)
-        if args.cmd == "import-db":
-            return cmd_import_db(spark, cfg, args.dburl)
-        if args.cmd == "dl-summary":
-            return cmd_dl_summary(spark, cfg, args.download_id, args.indices)
-        if args.cmd == "db-drop":
-            return cmd_db_drop(spark, cfg, args.download_id)
-        return cmd_dl_stats(spark, cfg, args.html)
+        return args.run(args, session)
     finally:
-        if not preexisting:
+        if spark is not None and not preexisting:
             spark.stop()
 
 

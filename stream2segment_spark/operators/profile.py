@@ -91,3 +91,29 @@ def profile_table(
             .join(top, "col_name", "left")
             .select("col_name", "n_rows", "n_nulls", "min_str", "max_str",
                     "n_distinct_est", "top_value", "top_count", "top_rank"))
+
+
+def profile_rules(rows, schema) -> dict[str, dict]:
+    """A data-quality contract for ``operators/validate.validate_table``
+    inferred from collected :func:`profile_table` rows of a frame with
+    ``schema``: per column, the observed non-null fraction floored to 2
+    decimals (``not_null_frac``) and, for numeric columns, the observed
+    range (``min_ge`` / ``max_le``)."""
+    import math
+
+    numeric = {f.name for f in schema.fields
+               if f.dataType.typeName() in
+               ("integer", "long", "short", "byte", "float", "double",
+                "decimal")}
+    rules: dict[str, dict] = {}
+    for r in rows:
+        if r["top_rank"] != 1:
+            continue
+        c, n = r["col_name"], r["n_rows"]
+        nn = (n - r["n_nulls"]) / n if n else 1.0
+        rc = {"not_null_frac": math.floor(nn * 100) / 100}
+        if c in numeric and r["min_str"] is not None:
+            rc["min_ge"] = float(r["min_str"])
+            rc["max_le"] = float(r["max_str"])
+        rules[c] = rc
+    return rules

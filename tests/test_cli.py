@@ -1022,6 +1022,26 @@ def test_compact_and_skew_cli(spark, tmp_path, capsys):
     assert cli_main(["skew", "-i", src, "--key", "nope"]) == 2
 
 
+def test_compact_cli_uri_paths(spark, tmp_path, capsys):
+    """``file://`` input and output: the input size and the output file
+    count are read through the path's Hadoop FileSystem, not ``os``."""
+    import json
+    import os
+
+    from stream2segment_spark.cli import main as cli_main
+
+    src = tmp_path / "many.parquet"
+    spark.range(1000).repartition(8).write.parquet(str(src))
+    size = sum(os.path.getsize(src / f) for f in os.listdir(src)
+               if f.endswith(".parquet"))
+    out = tmp_path / "compacted"
+    rc = cli_main(["compact", "-i", src.as_uri(), "-o", out.as_uri()])
+    assert rc == 0
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stats == {"input_bytes": size, "files": 1}
+    assert spark.read.parquet(str(out)).count() == 1000
+
+
 def test_cli_sql(spark, tmp_path, capsys):
     import json
 
@@ -1038,6 +1058,18 @@ def test_cli_sql(spark, tmp_path, capsys):
     lines = [json.loads(l) for l in
              capsys.readouterr().out.strip().splitlines()]
     assert lines == [{"k": 3, "v": 30}, {"k": 4, "v": 40}]
+
+
+def test_cli_sql_uri_dir(spark, tmp_path, capsys):
+    """A ``file://`` table directory is listed through its Hadoop
+    FileSystem: each <name>.parquet under it becomes view <name>."""
+    import json
+
+    d = tmp_path / "tables"
+    spark.range(5).selectExpr("id AS k").write.parquet(str(d / "t.parquet"))
+    rc = cli.main(["sql", "SELECT count(*) AS n FROM t", "-i", d.as_uri()])
+    assert rc == 0
+    assert json.loads(capsys.readouterr().out.strip()) == {"n": 5}
 
 
 def test_cli_sql_derived_views_on_testdata(capsys):
