@@ -240,10 +240,10 @@ def cmd_download(spark: SparkSession, cfg: dict, cfg_text: str = "") -> int:
         download_id=did,
         **dc_kwargs,
     )
-    # events and channels come back checkpointed (download_pipeline
-    # materializes them at ingest), and stations derive from that
-    # checkpoint; segments are derived from the stored segments table,
-    # so materialize them BEFORE the write overwrites it
+    # events and channels come back as projections over id-sync's
+    # checkpoints, and stations derive from the channels one; segments
+    # are derived from the stored segments table, so materialize them
+    # BEFORE the write overwrites it
     out["segments"] = out["segments"].localCheckpoint(eager=True)
     stations = stations_of(out["channels"])
     if cfg.get("inventory"):  # 's2s download -i': station XML inventories
@@ -1395,12 +1395,14 @@ def cmd_layout(args, session) -> int:
 
     from stream2segment_spark.sinks.layout import (
         file_key_ranges, int_cell, write_range_layout, write_zorder_layout)
+    from stream2segment_spark.warehouse import _local
+    outdir = _local(args.outdir)  # the key ranges are read driver-side
     df = session().read.parquet(args.infile)
     keys = [k.strip() for k in args.key.split(",")]
     if _missing_columns(df, args.infile, keys):
         return 2
     if len(keys) == 1:
-        write_range_layout(df, args.outdir, keys[0], args.files)
+        write_range_layout(df, outdir, keys[0], args.files)
     else:
         if not args.domains:
             print("error: multi-column --key needs --domains lo:hi per "
@@ -1414,11 +1416,10 @@ def cmd_layout(args, session) -> int:
             return 2
         cells = {k: int_cell(F.col(k), lo, hi, args.bits)
                  for k, (lo, hi) in zip(keys, doms)}
-        write_zorder_layout(df, args.outdir, cells, args.files,
-                            bits=args.bits)
+        write_zorder_layout(df, outdir, cells, args.files, bits=args.bits)
     print(json.dumps([{"key": k, "file": f, "min": str(lo), "max": str(hi)}
                       for k in keys
-                      for f, lo, hi in file_key_ranges(args.outdir, k)]))
+                      for f, lo, hi in file_key_ranges(outdir, k)]))
     return 0
 
 

@@ -46,14 +46,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Measurement hook (tools/ab_barrier.py): same-session interleaved
-# A/B arms rebuild their DataFrames with the barrier off. Not a
-# production switch — the default is always on. It is read when a plan
-# is BUILT (each opt_barrier call), so it must not be flipped while
-# another thread builds plans: the download pass builds its dims on two
-# threads at once (pipeline._concurrently).
-DISABLED = False
-
 # Fixed seed: the barrier must be non-deterministic to the OPTIMIZER
 # but canonically STABLE across plan builds — an unseeded expression
 # (e.g. shuffle()) draws a fresh seed at every analysis, so two builds
@@ -73,7 +65,5 @@ def opt_barrier(col: Column) -> Column:
     optimizer, which is the entire point. (The simpler
     ``when(rand() >= -1, col)`` form is eliminated by Spark 4's
     conditional simplification; the arithmetic identity is not.)"""
-    if DISABLED:
-        return col
     idx = (F.rand(_SEED) * 0 + 1).cast("int")
     return F.element_at(F.array(col), idx)

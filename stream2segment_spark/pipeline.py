@@ -15,11 +15,11 @@ Every stage is a DataFrame -> DataFrame function from the operator
 modules; this module only wires them. Each product is computed once; the
 chain materializes at three points, each for a reason of its own:
 
-- the ingested dims (``events``, ``channels``) right after id-sync: the
+- the ingested dims (``events``, ``channels``), inside id-sync: the
   spatial join, the channel-key join, ``stations_of`` and the caller's
-  warehouse writes all read them. Id-sync already returns a narrow
+  warehouse writes all read them, and id-sync returns a narrow
   projection over its own materialization, so no action re-parses the
-  FDSN text; the checkpoint makes each dim one plain LogicalRDD;
+  FDSN text;
 - the ``fetched`` responses with their decoded miniSEED metrics: the HTTP
   fetch is not idempotent, so no second action may repeat dataselect
   requests or see a different transient response, and no branch below
@@ -34,7 +34,7 @@ range-partitioned input and collects the stored table's top id and the
 per-partition row counts (n_partitions rows). Nothing else is collected.
 
 The two dims are ingested concurrently (``_concurrently``): each branch
-is parse -> dedup -> id-sync -> checkpoint, reads only its own FDSN text
+is parse -> dedup -> id-sync, reads only its own FDSN text
 and its own stored table, and neither reads the other's output, so they
 run as two threads of Spark actions instead of one after the other. At
 small inputs a pass waits on per-action latency (driver planning, job
@@ -267,15 +267,14 @@ def download_pipeline(
     ``existing_segments`` keep their own ``download_id`` through the
     merge, and stored rows without one (a warehouse predating the column)
     stay NULL. Without it, written rows carry no stamp."""
-    # checkpointed right after ingest: every downstream action reads one
-    # materialization instead of re-parsing the FDSN text; the two dims
-    # are independent, so both branches run at the same time
+    # id-sync materializes each dim, so every downstream action reads
+    # that instead of re-parsing the FDSN text; the two dims are
+    # independent, so both branches run at the same time
     events, channels = _concurrently(
         spark,
-        lambda: ingest_events(event_lines, existing_events)
-        .localCheckpoint(eager=True),
+        lambda: ingest_events(event_lines, existing_events),
         lambda: ingest_channels(channel_lines, existing_channels,
-                                **channel_filters).localCheckpoint(eager=True))
+                                **channel_filters))
     stations = stations_of(channels)
 
     ev = events.select(

@@ -30,6 +30,7 @@ import sqlite3
 import pyarrow.parquet as pq
 
 from stream2segment_spark.sources.dbimport import TABLES
+from stream2segment_spark.warehouse import _local
 
 # unique constraints per reference table (io/db/models.py: events :210,
 # data_centers :245, stations :314, channels :344, segments :442,
@@ -90,6 +91,7 @@ def export_sqlite(warehouse: str, db_path: str,
     """Write every warehouse table that exists to ``db_path`` (created
     fresh; refuses to overwrite an existing file). Returns
     {reference_table: n_rows}."""
+    warehouse = _local(warehouse)
     if os.path.exists(db_path):
         raise FileExistsError(
             f"{db_path} exists — refusing to overwrite a database")

@@ -129,6 +129,8 @@ def file_key_ranges(path: str, key: str) -> list[tuple[str, object, object]]:
 
     import pyarrow.parquet as pq
 
+    from stream2segment_spark.warehouse import _local
+    path = _local(path)
     out = []
     for name in sorted(os.listdir(path)):
         if not name.endswith(".parquet"):

@@ -70,11 +70,20 @@ def _align_to(table: "pa.Table", schema: "pa.Schema") -> "pa.Table":
     return pa.table(cols)
 
 
-def _local(warehouse: str) -> str:
-    """A ``file:`` URI warehouse as the local path pyarrow and ``os``
-    take (Spark reads and writes the same tables under either form)."""
-    url = urlparse(warehouse)
-    return url.path if url.scheme == "file" else warehouse
+def _local(path: str) -> str:
+    """A path or ``file:`` URI as the local path pyarrow and ``os`` take
+    (Spark reads and writes the same tables under either form). The one
+    rule for driver-side warehouse I/O: it has no other filesystem, so
+    any other scheme (``hdfs://``, ``s3a://``) raises a ValueError
+    before anything is read or written."""
+    url = urlparse(path)
+    if url.scheme == "file":
+        return url.path
+    if url.scheme:
+        raise ValueError(
+            f"{path}: driver-side warehouse I/O takes a local path or a "
+            f"file: URI, not the {url.scheme!r} scheme")
+    return path
 
 
 def _path(warehouse: str, name: str) -> str:

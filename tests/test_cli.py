@@ -295,6 +295,45 @@ def test_uri_warehouse_download_twice_then_process(warehouse, tmp_path,
     assert [{k: r[k] for k in DIMS_ROW} for r in rows] == [DIMS_ROW]
 
 
+def test_export_db_uri_warehouse(tmp_path, capsys):
+    """'s2s export-db' finds the tables of a ``file://`` warehouse."""
+    from stream2segment_spark import warehouse as wh
+    wh.record_download(str(tmp_path / "wh"), "log", "cfg: 1")
+    cfg = tmp_path / "cfg.yaml"
+    cfg.write_text(yaml.safe_dump({"warehouse": (tmp_path / "wh").as_uri()}))
+    assert cli.main(["export-db", "-c", str(cfg),
+                     "-o", str(tmp_path / "out.sqlite")]) == 0
+    assert "downloads: 1 row(s)" in capsys.readouterr().out
+
+
+def test_layout_cli_uri_outdir(spark, tmp_path, capsys):
+    """'s2s layout -o file:///...' writes the layout and reads its
+    per-file key ranges back."""
+    import json
+    src = str(tmp_path / "in.parquet")
+    spark.range(100).write.parquet(src)
+    assert cli.main(["layout", "-i", src, "-o", (tmp_path / "out").as_uri(),
+                     "--key", "id", "--files", "2"]) == 0
+    ivals = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    (lo0, hi0), (lo1, hi1) = sorted((int(r["min"]), int(r["max"]))
+                                    for r in ivals)
+    assert lo0 == 0 and hi0 < lo1 and hi1 == 99
+
+
+def test_download_into_other_scheme_raises_first(warehouse, spark, tmp_path,
+                                                 monkeypatch):
+    """Driver-side warehouse I/O takes paths and ``file:`` URIs only: a
+    download into ``hdfs://`` raises a ValueError naming the scheme
+    before anything is written, so no local directory named after the
+    URI appears."""
+    monkeypatch.chdir(tmp_path)
+    cfg = {**_fresh_cfg(warehouse, tmp_path),
+           "warehouse": "hdfs://localhost:9/wh"}
+    with pytest.raises(ValueError, match="'hdfs' scheme"):
+        cli.cmd_download(spark, cfg)
+    assert not any(p.name.startswith("hdfs") for p in tmp_path.iterdir())
+
+
 def transport_with_inventory(url: str, body):
     if "level=response" in url:  # station service -> XML inventory
         return b"<FDSNStationXML>GE.STA1</FDSNStationXML>", 200

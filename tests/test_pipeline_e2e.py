@@ -161,11 +161,10 @@ def test_channels_cross_datacenter_routing(spark):
 
 
 def test_plan_reads_fdsn_text_once(spark, tmp_path):
-    """Plan shape of the download chain: the ingested dims come back as
-    checkpoints (LogicalRDD), and neither the candidates nor the segments
-    plan still holds a text-file scan, so every downstream action reads
-    one materialization instead of re-parsing the FDSN text and
-    re-running dedup and id-sync."""
+    """Plan shape of the download chain: none of the ingested dims, the
+    candidates or the segments plan still holds a text-file scan, so
+    every downstream action reads one materialization instead of
+    re-parsing the FDSN text and re-running dedup and id-sync."""
     import re
     (tmp_path / "events.txt").write_text("\n".join(EVENT_LINES))
     (tmp_path / "channels.txt").write_text("\n".join(CHANNEL_LINES))
@@ -183,10 +182,8 @@ def test_plan_reads_fdsn_text_once(spark, tmp_path):
     def optimized(df):
         return df._jdf.queryExecution().optimizedPlan()
 
-    for name in ("events", "channels"):
-        assert optimized(out[name]).nodeName() == "LogicalRDD", name
     text_scan = re.compile(r"Relation \[[^\]]*\] text")
-    for name in ("candidates", "segments"):
+    for name in ("events", "channels", "candidates", "segments"):
         plan = optimized(out[name]).toString()
         assert not text_scan.search(plan), f"{name} re-reads FDSN text"
     # the scan pattern does match a plan that reads the text directly
@@ -220,10 +217,10 @@ def _executed_nodes(spark, fn) -> list[str]:
 
 def test_ingest_events_reads_text_once(spark, tmp_path):
     """Plan-shape sentinel for id-sync: ``ingest_events`` over a text file,
-    materialized as ``download_pipeline`` does, scans the file once and
-    range-partitions once, with no nested-loop join, whether the stored
-    events table is missing (first download) or holds rows. Every
-    execution counts, the eager ones inside id-sync included."""
+    then materialized, scans the file once and range-partitions once,
+    with no nested-loop join, whether the stored events table is missing
+    (first download) or holds rows. Every execution counts, the eager
+    ones inside id-sync included."""
     from stream2segment_spark import cli
     from stream2segment_spark.pipeline import ingest_events
     (tmp_path / "events.txt").write_text("\n".join(EVENT_LINES))

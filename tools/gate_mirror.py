@@ -17,6 +17,7 @@ locally instead of on driver data. Exit 0 = all green.
 
 from __future__ import annotations
 
+import argparse
 import importlib.util
 import sys
 import traceback
@@ -80,30 +81,20 @@ def compare(sdf, duck_df: pd.DataFrame) -> str | None:
 
 
 def main() -> int:
-    global SF_DIR
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--sf-dir", default=SF_DIR)
+    ap.add_argument("queries", nargs="*", help="entries to check (all)")
+    args = ap.parse_args()
     mod = _load_entry()
     qs, osql = mod.queries(), mod.oracle_sql()
-    args = sys.argv[1:]
-    if "--sf-dir" in args:
-        i = args.index("--sf-dir")
-        if i + 1 >= len(args):
-            print("--sf-dir needs a directory operand", file=sys.stderr)
-            return 2
-        SF_DIR = args[i + 1]
-        del args[i:i + 2]
-    for a in args:
-        if a.startswith("--sf-dir="):
-            SF_DIR = a.split("=", 1)[1]
-    args = [a for a in args if not a.startswith("--sf-dir=")]
     # an unmatched operand must be an ERROR, never a silent 0/0-green
-    # exit (a typo'd entry name or flag would otherwise report the
-    # gate as passing when nothing was checked)
-    unknown = [a for a in args if a not in qs]
+    # exit (a typo'd entry name would otherwise report the gate as
+    # passing when nothing was checked); argparse rejects unknown flags
+    unknown = [a for a in args.queries if a not in qs]
     if unknown:
-        print(f"unknown query/flag argument(s): {unknown}", file=sys.stderr)
+        print(f"unknown query argument(s): {unknown}", file=sys.stderr)
         return 2
-    only = args
-    names = [n for n in qs if not only or n in only]
+    names = [n for n in qs if not args.queries or n in args.queries]
 
     from pyspark.sql import SparkSession
     spark = (SparkSession.builder.master("local[8]")
@@ -119,12 +110,12 @@ def main() -> int:
     con.execute("SET TimeZone='UTC'")
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf_dir}/{t}.parquet')")
 
     failed = []
     for name in names:
         try:
-            sdf = qs[name](spark, SF_DIR)
+            sdf = qs[name](spark, args.sf_dir)
             if name not in osql:
                 print(f"{name:28s} NO_ORACLE rows={sdf.count()}")
                 continue

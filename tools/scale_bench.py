@@ -24,7 +24,6 @@ import json
 import os
 import shutil
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -139,26 +138,19 @@ def _entry_mod():
 def run(spark, sf_dir: str, names) -> dict[str, float]:
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
+
+    from bench import entry_runs
     qs = _entry_mod().queries()
     out = {}
     for n in names:
-        spark.catalog.clearCache()
-        df = qs[n](spark, sf_dir)
-        # row count via observe() on the TIMED run: the old separate
-        # df.count() re-executed every query a second time (under
-        # aggregate pruning, i.e. a different plan) — doubling tool
-        # runtime at scale for a metric the timed action already has
-        # (r6 ADVICE)
+        # row count via observe() on the TIMED run: a separate count()
+        # would re-execute every query under aggregate pruning (a
+        # different plan), doubling tool runtime at scale (r6 ADVICE)
         obs = Observation(f"rows_{n}")
-        df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        t0 = time.time()
-        # noop write, NEVER .count(): Catalyst prunes aggregate/
-        # projection expressions under count() and the alpha would
-        # measure scan-only cost (the bench.py discipline; the r6
-        # review caught this tool still counting)
-        df.write.format("noop").mode("overwrite").save()
-        sec = round(time.time() - t0, 2)
-        out[n] = {"sec": sec, "rows": obs.get["n"]}
+        (sec,) = entry_runs(
+            spark, lambda s, d: qs[n](s, d).observe(
+                obs, F.count(F.lit(1)).alias("n")), sf_dir, 1)
+        out[n] = {"sec": round(sec, 2), "rows": obs.get["n"]}
     return out
 
 
